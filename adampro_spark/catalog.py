@@ -9,14 +9,35 @@ names, schemas, index metadata (marks/centroids/projections) and counters.
 The catalog is driver-side only and tiny, so plain-file durability is fine;
 on a real cluster this would live on shared storage (the ``base`` path can
 be any fuse-mounted / object-store path reachable from the driver).
+
+Read path: every write replaces the file (new inode) and bumps an
+in-process write counter, so ``(st_ino, st_mtime_ns, st_size, writes)``
+identifies one catalog state — its :meth:`Catalog.generation`.  The parse
+is cached under that key (readers still get private copies), and
+:meth:`Catalog.relation` keeps one DataFrame per (session, name,
+generation), so a query does not re-list or re-infer unchanged storage.
 """
 
 from __future__ import annotations
 
 import json
+import marshal
 import os
 import threading
+from collections.abc import Callable
 from typing import Any
+
+# catalog writes made by this process (any Catalog instance): part of the
+# generation key, so an in-process write invalidates even when the new
+# file happens to reuse the old one's inode, mtime and size
+_WRITES = 0
+_WRITES_LOCK = threading.Lock()
+
+
+def _count_write() -> None:
+    global _WRITES
+    with _WRITES_LOCK:
+        _WRITES += 1
 
 
 class Catalog:
@@ -24,13 +45,63 @@ class Catalog:
         self.base = base
         self.path = os.path.join(base, "_catalog.json")
         self._lock = threading.RLock()
+        self._parsed: tuple[tuple, bytes] | None = None
+        self._relations: dict[tuple, tuple] = {}
         os.makedirs(base, exist_ok=True)
         if not os.path.exists(self.path):
             self._write({"entities": {}, "indexes": {}})
 
     def _read(self) -> dict[str, Any]:
-        with open(self.path) as f:
-            return json.load(f)
+        """The catalog as a private dict.  The parse is cached under the
+        generation of the file actually opened (fstat, so the key always
+        describes the bytes read); copies come from a ``marshal`` blob,
+        ~10× cheaper than re-parsing the JSON or ``deepcopy``."""
+        writes = _WRITES
+        with open(self.path, "rb") as f:
+            st = os.fstat(f.fileno())
+            key = (st.st_ino, st.st_mtime_ns, st.st_size, writes)
+            parsed = self._parsed
+            if parsed is None or parsed[0] != key:
+                data = json.load(f)
+                self._parsed = (key, marshal.dumps(data))
+                return data
+        return marshal.loads(parsed[1])
+
+    def generation(self) -> tuple:
+        """Identity of the current catalog state; changes on every write,
+        from this process or another."""
+        writes = _WRITES
+        st = os.stat(self.path)
+        return (st.st_ino, st.st_mtime_ns, st.st_size, writes)
+
+    def relation(
+        self,
+        spark,
+        key: tuple,
+        build: Callable[[], Any],
+        valid: Callable[[], bool] | None = None,
+    ):
+        """One DataFrame per (session, ``key``, generation): ``build`` runs
+        only when the catalog changed since the cached one was built (or
+        on a new session).  The generation is taken BEFORE ``build`` reads
+        the catalog, so a write racing the build leaves a stale key that
+        the next call rebuilds.  Storage rewrites therefore must record a
+        catalog write (:meth:`record_rewrite`) — that is what invalidates
+        the file listing a cached relation holds.  ``valid`` re-checks
+        session state the catalog does not record (a bucketed table still
+        registered in the session catalog) before a hit is served."""
+        gen = self.generation()
+        hit = self._relations.get(key)
+        if (
+            hit is not None
+            and hit[0] is spark
+            and hit[1] == gen
+            and (valid is None or valid())
+        ):
+            return hit[2]
+        df = build()
+        self._relations[key] = (spark, gen, df)
+        return df
 
     def _write(self, data: dict[str, Any]) -> None:
         # unique tmp per writer: a FIXED tmp name let two PROCESSES (the
@@ -50,6 +121,7 @@ class Catalog:
             with os.fdopen(fd, "w") as f:
                 json.dump(data, f, indent=1, default=_jsonify)
             os.replace(tmp, self.path)
+            _count_write()
         except BaseException:
             try:
                 os.unlink(tmp)
@@ -140,6 +212,17 @@ class Catalog:
             for idx in data["indexes"].values():
                 if idx["entity"] == name:
                     idx["stale"] = True
+            self._write(data)
+
+    def record_rewrite(self, section: str, name: str) -> None:
+        """Count a storage rewrite (vacuum, repartition, directory swap) of
+        ``name`` in ``section`` ("entities" / "indexes") that changes no
+        other catalog field: the write moves the generation, so cached
+        relations over the replaced files are rebuilt."""
+        with self._lock:
+            data = self._read()
+            rec = data[section][name]
+            rec["rewrites"] = int(rec.get("rewrites", 0)) + 1
             self._write(data)
 
     # -- indexes -----------------------------------------------------------

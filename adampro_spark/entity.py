@@ -171,7 +171,20 @@ class Entity:
         sparse).  Every op that REWRITES storage (vacuum, delete,
         repartition, storage transfer) must read this, not :meth:`df` —
         writing the densified view back under the sparse catalog schema
-        corrupts the table (dense arrays, struct read schema)."""
+        corrupts the table (dense arrays, struct read schema).
+
+        One relation per catalog generation (:meth:`Catalog.relation`):
+        repeated queries reuse its file listing until a write.  Crash
+        recovery runs first, so a swap interrupted after the relation was
+        cached still gets its directory back."""
+        self._recover()
+        return self.catalog.relation(
+            self.spark, ("entity", self.name), self._read_stored,
+            valid=lambda: not os.path.exists(self.path + "_bucketed")
+            or self.spark.catalog.tableExists(self._bucket_table_name()),
+        )
+
+    def _read_stored(self) -> DataFrame:
         rec = self.catalog.entity(self.name)
         if rec.get("storage"):
             return self._handler_df(rec["storage"])
@@ -181,7 +194,6 @@ class Entity:
             # crash inside debucketize after the data moved back but
             # before the catalog flag cleared — finish the rollback
             self.catalog.update_entity(self.name, buckets=None)
-        self._recover()
         return self.spark.read.schema(self.schema()).parquet(self.path)
 
     def sparsify(self, attribute: str, threshold: float = 0.0) -> None:
@@ -395,7 +407,8 @@ class Entity:
         One write + one rename instead of the naive write-tmp/re-read/
         re-write (which doubles I/O and leaks the tmp dir).  On object
         stores the rename becomes a catalog pointer swap (Delta/Iceberg);
-        here local-FS rename is atomic enough.
+        here local-FS rename is atomic enough.  The swap is recorded in
+        the catalog, which retires relations listing the old files.
         """
         import shutil
 
@@ -405,6 +418,7 @@ class Entity:
         os.rename(self.path, old)
         os.rename(tmp_path, self.path)
         shutil.rmtree(old)
+        self.catalog.record_rewrite("entities", self.name)
 
     def delete(self, predicates) -> int:
         """Keep rows NOT matching (Entity.scala:415-450); returns rows removed.

@@ -4,10 +4,21 @@ Parity target: the 14 distance functions of the reference
 (``query/distance/*.scala``, registry ``communication/rpc/MessageParser.scala:314-341``).
 The reference computes them in row-at-a-time Scala UDFs
 (``query/distance/Distance.scala:26-55``); here each distance is a pure
-Column expression over ``array<float>`` built from higher-order functions
+expression over ``array<double>`` built from higher-order functions
 (``zip_with`` / ``aggregate`` / ``transform``), so the whole kNN scan stays
 inside whole-stage codegen with no serialization boundary — the single
 biggest throughput win over the reference at scale.
+
+Each distance is rendered as Spark SQL text and handed to ONE ``F.expr``
+call, so building it costs a constant number of JVM round trips whatever
+the vector dimension: a query or weight vector becomes a single
+``array(...)`` literal (:func:`sql_array`, bit-exact — see
+:func:`sql_double`), a column name is quoted exactly as ``F.col`` parses
+it (:func:`sql_ident`).  Building the same tree from ``F.lit`` per element
+and lambda-built Columns cost a py4j round trip per element and per node.
+
+Operands (:data:`VectorLike`): a ``str`` names an ``array<float|double>``
+column, any other sequence is a literal vector.
 
 Semantics preserved (see each function's docstring for the file:line cite):
   * storage is Float, math is Double (``Distance.scala:18-19``);
@@ -22,6 +33,7 @@ Semantics preserved (see each function's docstring for the file:line cite):
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column
@@ -29,38 +41,254 @@ from pyspark.sql import functions as F
 
 DOUBLE_MAX = 1.7976931348623157e308
 
-VectorLike = Column | str | Sequence[float]
+VectorLike = str | Sequence[float]
 
 
-def _as_vec(v: VectorLike) -> Column:
-    """Coerce a column name / Column / python sequence to an array<double> Column."""
-    if isinstance(v, Column):
-        return v.cast("array<double>")
+# ---------------------------------------------------------------------------
+# SQL text rendering
+# ---------------------------------------------------------------------------
+
+def sql_double(x: float) -> str:
+    """A DOUBLE literal that parses back to exactly ``float(x)``:
+    ``repr`` is the shortest round-tripping decimal and Spark parses the
+    ``D``-suffixed text with ``Double.parseDouble`` (correctly rounded),
+    so ±0.0, subnormals and the extremes survive bit-for-bit; NaN/±inf
+    have no literal syntax and go through ``CAST``."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"({x!r}D)" if math.copysign(1.0, x) < 0 else f"{x!r}D"
+
+
+def sql_array(values: Sequence[float]) -> str:
+    """``array<double>`` literal of ``values`` (see :func:`sql_double`)."""
+    return f"CAST(array({', '.join(map(sql_double, values))}) AS ARRAY<DOUBLE>)"
+
+
+def sql_int_array(values: Sequence[int]) -> str:
+    """``array<int>`` literal of ``values``."""
+    return f"CAST(array({', '.join(str(int(v)) for v in values)}) AS ARRAY<INT>)"
+
+
+def sql_in(column: str, values: Sequence[int]) -> str:
+    """``column IN (values)`` over integers; an empty list is ``FALSE``
+    (what ``F.col(column).isin([])`` filters to)."""
+    if not values:
+        return "FALSE"
+    return f"{sql_ident(column)} IN ({', '.join(str(int(v)) for v in values)})"
+
+
+def _name_parts(name: str) -> list[str]:
+    """Split a column name exactly as ``F.col`` does
+    (``UnresolvedAttribute.parseAttributeName``): dots separate nested
+    fields, a backticked part is taken literally with ```` `` ```` as an
+    escaped backtick."""
+    err = ValueError(f"syntax error in attribute name: {name!r}")
+    parts: list[str] = []
+    cur: list[str] = []
+    in_tick = False
+    i = 0
+    while i < len(name):
+        c = name[i]
+        if in_tick:
+            if c != "`":
+                cur.append(c)
+            elif i + 1 < len(name) and name[i + 1] == "`":
+                cur.append("`")
+                i += 1
+            else:
+                in_tick = False
+                if i + 1 < len(name) and name[i + 1] != ".":
+                    raise err
+        elif c == "`":
+            if cur:
+                raise err
+            in_tick = True
+        elif c == ".":
+            if i == 0 or name[i - 1] == "." or i == len(name) - 1:
+                raise err
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(c)
+        i += 1
+    if in_tick:
+        raise err
+    parts.append("".join(cur))
+    return parts
+
+
+def sql_ident(name: str) -> str:
+    """SQL reference to column ``name`` resolving exactly like ``F.col(name)``."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in _name_parts(name))
+
+
+def _vec(v: VectorLike) -> str:
+    """Operand → ``array<double>`` SQL text (column reference or literal)."""
     if isinstance(v, str):
-        return F.col(v).cast("array<double>")
-    return F.array(*[F.lit(float(x)) for x in v]).cast("array<double>")
+        return f"CAST({sql_ident(v)} AS ARRAY<DOUBLE>)"
+    return sql_array(v)
 
 
-def _sum(arr: Column) -> Column:
-    """Sum an array<double> column (map-side, per-row, codegen'd).
+# ---------------------------------------------------------------------------
+# shared fragments (SQL text over array<double> operands)
+# ---------------------------------------------------------------------------
+
+def _sum(arr: str) -> str:
+    """Sum an array<double> (map-side, per-row, codegen'd).
 
     ``coalesce(x, 0)`` absorbs the nulls ``zip_with`` pads in when the two
     vectors differ in length, matching the reference's loop over the common
     prefix (ElementwiseSummedDistanceFunction.scala:40-44) instead of
     propagating NULL distances that would sort ahead of real ones.
     """
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + F.coalesce(x, F.lit(0.0)))
+    return f"aggregate({arr}, 0.0D, (acc, x) -> acc + coalesce(x, 0.0D))"
 
 
-def _weighted(terms: Column, weights: VectorLike | None) -> Column:
-    if weights is None:
-        return terms
-    return F.zip_with(terms, _as_vec(weights), lambda t, w: t * w)
+def _zip(a: str, b: str, body: str) -> str:
+    """``zip_with(a, b, (x, y) -> body)``."""
+    return f"zip_with({a}, {b}, (x, y) -> {body})"
 
 
-def _null_guard(vec: Column, expr: Column) -> Column:
+def _weighted(terms: str, w: str | None) -> str:
+    return terms if w is None else f"zip_with({terms}, {w}, (t, w) -> t * w)"
+
+
+def _null_guard(v: str, expr: str) -> str:
     """NULL vector -> Double.MaxValue, never an error (Distance.scala:26-38)."""
-    return F.when(vec.isNull(), F.lit(DOUBLE_MAX)).otherwise(expr)
+    return f"CASE WHEN {v} IS NULL THEN {sql_double(DOUBLE_MAX)} ELSE {expr} END"
+
+
+def _dot(a: str, b: str) -> str:
+    return _sum(_zip(a, b, "x * y"))
+
+
+_EPS = sql_double(1e-5)
+
+
+# ---------------------------------------------------------------------------
+# distance SQL: (vec, query, weights) operand texts -> distance text
+# ---------------------------------------------------------------------------
+
+def _minkowski_sql(v: str, q: str, w: str | None, p: float) -> str:
+    if abs(p - 1.0) < 1e-5:
+        terms, root = _zip(v, q, "abs(x - y)"), "{}"
+    elif abs(p - 2.0) < 1e-5:
+        terms, root = _zip(v, q, "(x - y) * (x - y)"), "sqrt({})"
+    else:
+        terms = _zip(v, q, f"pow(abs(x - y), {sql_double(p)})")
+        root = f"pow({{}}, {sql_double(1.0 / float(p))})"
+    return _null_guard(v, root.format(_sum(_weighted(terms, w))))
+
+
+def _squaredeuclidean_sql(v: str, q: str, w: str | None) -> str:
+    return _null_guard(v, _sum(_weighted(_zip(v, q, "(x - y) * (x - y)"), w)))
+
+
+def _chebyshev_sql(v: str, q: str, w: str | None) -> str:
+    diffs = _weighted(_zip(v, q, "x - y"), w)
+    return _null_guard(v, f"array_max(transform({diffs}, d -> abs(d)))")
+
+
+def _cosine_sql(v: str, q: str, w: str | None = None) -> str:
+    nv, nq = f"sqrt({_dot(v, v)})", f"sqrt({_dot(q, q)})"
+    return _null_guard(
+        v,
+        f"CASE WHEN ({nv} < {_EPS}) OR ({nq} < {_EPS}) THEN 0.0D "
+        f"ELSE 1.0D - {_dot(v, q)} / ({nv} * {nq}) END",
+    )
+
+
+def _centered(a: str) -> str:
+    """``a - mean(a)`` elementwise.  The mean rides in as a second array
+    so no column reference sits inside a lambda body, where a column
+    named like the lambda variable would be captured by it; it is
+    evaluated once per row, so an empty array must not divide by zero."""
+    mean = f"try_divide({_sum(a)}, CAST(size({a}) AS DOUBLE))"
+    return f"zip_with({a}, array_repeat({mean}, size({a})), (x, m) -> x - m)"
+
+
+def _correlation_sql(v: str, q: str, w: str | None) -> str:
+    return _null_guard(v, _cosine_sql(_centered(v), _centered(q)))
+
+
+def _chisquared_sql(v: str, q: str, w: str | None) -> str:
+    terms = _zip(
+        v, q, "CASE WHEN x + y > 0.0D THEN (x - y) * (x - y) / (x + y) ELSE 0.0D END"
+    )
+    return _null_guard(v, _sum(_weighted(terms, w)))
+
+
+def _hamming_sql(v: str, q: str, w: str | None) -> str:
+    terms = _zip(v, q, f"CASE WHEN abs(x - y) > {_EPS} THEN 1.0D ELSE 0.0D END")
+    return _null_guard(v, _sum(_weighted(terms, w)))
+
+
+def _jaccard_sql(v: str, q: str, w: str | None) -> str:
+    smin = _sum(_zip(v, q, "least(x, y)"))
+    smax = _sum(_zip(v, q, "greatest(x, y)"))
+    # sum(max) == 0 guard: Spark 4's default ANSI mode turns the division
+    # into DIVIDE_BY_ZERO and aborts the scan; define the distance as 0
+    # there (identical all-zero overlap), the oracle mirror carries the
+    # same guard
+    return _null_guard(
+        v, f"CASE WHEN {smax} = 0.0D THEN 0.0D ELSE 1.0D - {smin} / {smax} END"
+    )
+
+
+def _kullbackleibler_sql(v: str, q: str, w: str | None) -> str:
+    terms = _zip(
+        q, v,
+        f"CASE WHEN (abs(x) < {_EPS}) OR (abs(y) < {_EPS}) THEN 0.0D "
+        "ELSE x * ln(x / y) END",
+    )
+    return _null_guard(v, _sum(terms))
+
+
+def _spannorm_sql(v: str, q: str, w: str | None) -> str:
+    diffs = _zip(v, q, "x - y")
+    return _null_guard(v, f"array_max({diffs}) - array_min({diffs})")
+
+
+def _modulo_sql(v: str, q: str, w: str | None) -> str:
+    # zero-divisor guard: ANSI mode aborts with REMAINDER_BY_ZERO on any
+    # zero query element (the reference's Java double % 0 NaNs instead)
+    # — a zero divisor contributes 0
+    terms = _zip(v, q, "CASE WHEN y = 0.0D THEN 0.0D ELSE x % y END")
+    return _null_guard(v, _sum(_weighted(terms, w)))
+
+
+_EARTH_RADIUS = 6371000.0
+
+
+def _haversine_sql(v: str, q: str, w: str | None) -> str:
+    def lat(a: str) -> str:
+        return f"radians(greatest(-90.0D, least(90.0D, {a}[0])))"
+
+    def lng(a: str) -> str:
+        m = f"(((({a}[1] % 360.0D) + 360.0D) % 360.0D))"
+        return f"radians(CASE WHEN {m} < 180.0D THEN {m} ELSE {m} - 360.0D END)"
+
+    lat1, lng1, lat2, lng2 = lat(v), lng(v), lat(q), lng(q)
+    dphi, dlmb = f"({lat2} - {lat1})", f"({lng2} - {lng1})"
+    a = (
+        f"(sin({dphi} / 2.0D) * sin({dphi} / 2.0D)"
+        f" + cos({lat1}) * cos({lat2}) * sin({dlmb} / 2.0D) * sin({dlmb} / 2.0D))"
+    )
+    dist = f"{sql_double(2.0 * _EARTH_RADIUS)} * atan2(sqrt({a}), sqrt(1.0D - {a}))"
+    return _null_guard(
+        v,
+        f"CASE WHEN (size({v}) < 2) OR (size({q}) < 2) "
+        f"THEN {sql_double(math.inf)} ELSE {dist} END",
+    )
+
+
+def _expr(sql: Callable[..., str], vec: VectorLike, query: VectorLike,
+          weights: VectorLike | None, *extra: float) -> Column:
+    w = None if weights is None else _vec(weights)
+    return F.expr(sql(_vec(vec), _vec(query), w, *extra))
 
 
 # ---------------------------------------------------------------------------
@@ -71,21 +299,7 @@ def minkowski(
     vec: VectorLike, query: VectorLike, p: float, weights: VectorLike | None = None
 ) -> Column:
     """(sum w_i * |x_i - q_i|^p)^(1/p) — MinkowskiDistance (NormBasedDistance.scala:26-30)."""
-    v, q = _as_vec(vec), _as_vec(query)
-    if abs(p - 1.0) < 1e-5:
-        terms = F.zip_with(v, q, lambda a, b: F.abs(a - b))
-    elif abs(p - 2.0) < 1e-5:
-        terms = F.zip_with(v, q, lambda a, b: (a - b) * (a - b))
-    else:
-        terms = F.zip_with(v, q, lambda a, b: F.pow(F.abs(a - b), F.lit(float(p))))
-    s = _sum(_weighted(terms, weights))
-    if abs(p - 1.0) < 1e-5:
-        out = s
-    elif abs(p - 2.0) < 1e-5:
-        out = F.sqrt(s)
-    else:
-        out = F.pow(s, F.lit(1.0 / float(p)))
-    return _null_guard(v, out)
+    return _expr(_minkowski_sql, vec, query, weights, float(p))
 
 
 def manhattan(vec: VectorLike, query: VectorLike, weights: VectorLike | None = None) -> Column:
@@ -102,82 +316,44 @@ def squaredeuclidean(
     vec: VectorLike, query: VectorLike, weights: VectorLike | None = None
 ) -> Column:
     """sum w*(x-q)^2, no root (NormBasedDistance.scala:52-58)."""
-    v, q = _as_vec(vec), _as_vec(query)
-    terms = F.zip_with(v, q, lambda a, b: (a - b) * (a - b))
-    return _null_guard(v, _sum(_weighted(terms, weights)))
+    return _expr(_squaredeuclidean_sql, vec, query, weights)
 
 
 def chebyshev(vec: VectorLike, query: VectorLike, weights: VectorLike | None = None) -> Column:
     """max |w*(x-q)| (NormBasedDistance.scala:63-71; weights multiply before abs)."""
-    v, q = _as_vec(vec), _as_vec(query)
-    diffs = F.zip_with(v, q, lambda a, b: a - b)
-    diffs = _weighted(diffs, weights)
-    return _null_guard(v, F.array_max(F.transform(diffs, lambda d: F.abs(d))))
+    return _expr(_chebyshev_sql, vec, query, weights)
 
 
 # ---------------------------------------------------------------------------
 # Angular / statistical family
 # ---------------------------------------------------------------------------
 
-def _dot(a: Column, b: Column) -> Column:
-    return _sum(F.zip_with(a, b, lambda x, y: x * y))
-
-
 def cosine(vec: VectorLike, query: VectorLike, weights: VectorLike | None = None) -> Column:
     """1 - x.q/(|x||q|); any zero-norm side -> 0 (CosineDistance.scala:16-29).
 
     Weights ignored, as in the reference.
     """
-    v, q = _as_vec(vec), _as_vec(query)
-    nv, nq = F.sqrt(_dot(v, v)), F.sqrt(_dot(q, q))
-    expr = F.when((nv < 1e-5) | (nq < 1e-5), F.lit(0.0)).otherwise(
-        F.lit(1.0) - _dot(v, q) / (nv * nq)
-    )
-    return _null_guard(v, expr)
-
-
-def _centered(a: Column) -> Column:
-    mean = _sum(a) / F.size(a).cast("double")
-    return F.transform(a, lambda x: x - mean)
+    return _expr(_cosine_sql, vec, query, None)
 
 
 def correlation(vec: VectorLike, query: VectorLike, weights: VectorLike | None = None) -> Column:
     """cosine(x - mean(x), q - mean(q)) (CorrelationDistance.scala:16-24). Weights ignored."""
-    v, q = _as_vec(vec), _as_vec(query)
-    return _null_guard(v, cosine(_centered(v), _centered(q)))
+    return _expr(_correlation_sql, vec, query, None)
 
 
 def chisquared(vec: VectorLike, query: VectorLike, weights: VectorLike | None = None) -> Column:
     """sum w*(x-q)^2/(x+q) where x+q>0 else 0 (ChiSquaredDistance.scala)."""
-    v, q = _as_vec(vec), _as_vec(query)
-    terms = F.zip_with(
-        v, q,
-        lambda a, b: F.when(a + b > 0, (a - b) * (a - b) / (a + b)).otherwise(F.lit(0.0)),
-    )
-    return _null_guard(v, _sum(_weighted(terms, weights)))
+    return _expr(_chisquared_sql, vec, query, weights)
 
 
 def hamming(vec: VectorLike, query: VectorLike, weights: VectorLike | None = None) -> Column:
     """sum w*[|x-q| > 1e-5] (HammingDistance.scala)."""
-    v, q = _as_vec(vec), _as_vec(query)
-    terms = F.zip_with(
-        v, q, lambda a, b: F.when(F.abs(a - b) > 1e-5, F.lit(1.0)).otherwise(F.lit(0.0))
-    )
-    return _null_guard(v, _sum(_weighted(terms, weights)))
+    return _expr(_hamming_sql, vec, query, weights)
 
 
 def jaccard(vec: VectorLike, query: VectorLike, weights: VectorLike | None = None) -> Column:
     """1 - sum(min)/sum(max) (JaccardDistance.scala:17-29). Weights ignored."""
-    v, q = _as_vec(vec), _as_vec(query)
-    smin = _sum(F.zip_with(v, q, lambda a, b: F.least(a, b)))
-    smax = _sum(F.zip_with(v, q, lambda a, b: F.greatest(a, b)))
-    # sum(max) == 0 guard: Spark 4's default ANSI mode turns the division
-    # into DIVIDE_BY_ZERO and aborts the scan (review r6, reproduced);
-    # define the distance as 0 there (identical all-zero overlap), the
-    # oracle mirror carries the same guard
-    return _null_guard(
-        v, F.when(smax == 0.0, F.lit(0.0)).otherwise(F.lit(1.0) - smin / smax)
-    )
+    return _expr(_jaccard_sql, vec, query, None)
 
 
 def kullbackleibler(
@@ -190,37 +366,18 @@ def kullbackleibler(
     Weights are IGNORED: the reference's ``element(v1, v2, w)`` override drops
     ``w`` entirely (KullbackLeiblerDivergence.scala:15-21).
     """
-    v, q = _as_vec(vec), _as_vec(query)
-    terms = F.zip_with(
-        q, v,
-        lambda a, b: F.when((F.abs(a) < 1e-5) | (F.abs(b) < 1e-5), F.lit(0.0)).otherwise(
-            a * F.log(a / b)
-        ),
-    )
-    return _null_guard(v, _sum(terms))
+    return _expr(_kullbackleibler_sql, vec, query, None)
 
 
 def spannorm(vec: VectorLike, query: VectorLike, weights: VectorLike | None = None) -> Column:
     """max(x-q) - min(x-q) (SpanNormDistance.scala:16-23). Weights ignored."""
-    v, q = _as_vec(vec), _as_vec(query)
-    diffs = F.zip_with(v, q, lambda a, b: a - b)
-    return _null_guard(v, F.array_max(diffs) - F.array_min(diffs))
+    return _expr(_spannorm_sql, vec, query, None)
 
 
 def modulo(vec: VectorLike, query: VectorLike, weights: VectorLike | None = None) -> Column:
     """sum w*(x mod q_elem) with query element as divisor base (ModuloDistance.scala:
     element(v1_q, v2, w) = w * (v2 % v1_q) where v1_q is the query element)."""
-    v, q = _as_vec(vec), _as_vec(query)
-    # zero-divisor guard: ANSI mode aborts with REMAINDER_BY_ZERO on any
-    # zero query element (review r6, reproduced; the reference's Java
-    # double % 0 NaNs instead) — a zero divisor contributes 0
-    terms = F.zip_with(
-        v, q, lambda a, b: F.when(b == 0.0, F.lit(0.0)).otherwise(a % b)
-    )
-    return _null_guard(v, _sum(_weighted(terms, weights)))
-
-
-_EARTH_RADIUS = 6371000.0
+    return _expr(_modulo_sql, vec, query, weights)
 
 
 def haversine(vec: VectorLike, query: VectorLike, weights: VectorLike | None = None) -> Column:
@@ -228,26 +385,7 @@ def haversine(vec: VectorLike, query: VectorLike, weights: VectorLike | None = N
     (HaversineDistance.scala:22-66): clamp lat to [-90,90], normalize lng to
     [-180,180), spherical earth R=6371000.  <2 dims -> +Inf.  Weights ignored.
     """
-    v, q = _as_vec(vec), _as_vec(query)
-
-    def _lat(a: Column) -> Column:
-        return F.radians(F.greatest(F.lit(-90.0), F.least(F.lit(90.0), a.getItem(0))))
-
-    def _lng(a: Column) -> Column:
-        m = ((a.getItem(1) % 360.0) + 360.0) % 360.0
-        return F.radians(F.when(m < 180.0, m).otherwise(m - 360.0))
-
-    lat1, lng1, lat2, lng2 = _lat(v), _lng(v), _lat(q), _lng(q)
-    dphi, dlmb = lat2 - lat1, lng2 - lng1
-    a = (
-        F.sin(dphi / 2.0) * F.sin(dphi / 2.0)
-        + F.cos(lat1) * F.cos(lat2) * F.sin(dlmb / 2.0) * F.sin(dlmb / 2.0)
-    )
-    dist = 2.0 * _EARTH_RADIUS * F.atan2(F.sqrt(a), F.sqrt(1.0 - a))
-    expr = F.when(
-        (F.size(v) < 2) | (F.size(q) < 2), F.lit(float("inf"))
-    ).otherwise(dist)
-    return _null_guard(v, expr)
+    return _expr(_haversine_sql, vec, query, None)
 
 
 # ---------------------------------------------------------------------------

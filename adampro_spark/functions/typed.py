@@ -16,8 +16,6 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from adampro_spark.functions.distances import VectorLike, _as_vec
-
 
 def dense_to_sparse(vec: Column | str, threshold: float = 0.0) -> Column:
     """Sparsify a dense array into the reference struct shape

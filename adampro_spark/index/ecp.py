@@ -23,6 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from adampro_spark.functions.distances import sql_array, sql_in
 from adampro_spark.index._util import (
     argmin_expr,
     np_distance,
@@ -336,11 +337,15 @@ def scan_ecp(
             break
         cum += int(counts[li])
 
-    # surrogate score: distance to the row's leader (broadcast lookup array)
-    dist_lookup = F.lit([float(x) for x in d])
+    # surrogate score: distance to the row's leader — the leader-distance
+    # vector and the chosen cells ride in the expression text, one JVM
+    # call each whatever the leader count
     return (
-        df.filter(F.col(FEATURE_COL).isin(chosen))
-        .withColumn(DISTANCE_COL, F.element_at(dist_lookup, F.col(FEATURE_COL) + 1))
+        df.filter(F.expr(sql_in(FEATURE_COL, chosen)))
+        .withColumn(
+            DISTANCE_COL,
+            F.expr(f"element_at({sql_array(d)}, {FEATURE_COL} + 1)"),
+        )
         .select(pk, DISTANCE_COL)
     )
 
@@ -461,7 +466,7 @@ def ecp_knn(
     )
     if phase2:
         seed_cands = index_df.filter(
-            F.col(FEATURE_COL).isin(seeds)
+            F.expr(sql_in(FEATURE_COL, seeds))
         ).select(pk)
         seed_top = sequential_scan(
             df, vector_col, query, k, dn, prefilter=seed_cands, pk=pk
@@ -485,7 +490,7 @@ def ecp_knn(
         phase2=bool(phase2),
         prune_est=prune_est,
     )
-    cands = index_df.filter(F.col(FEATURE_COL).isin(chosen)).select(pk)
+    cands = index_df.filter(F.expr(sql_in(FEATURE_COL, chosen))).select(pk)
     return sequential_scan(
         df, vector_col, query, k, dn, prefilter=cands, pk=pk
     )
@@ -543,7 +548,7 @@ def ecp_radius(
     )
     chosen = [int(i) for i in np.flatnonzero(d <= float(radius) + radii)]
     pk = meta["pk"]
-    cands = index_df.filter(F.col(FEATURE_COL).isin(chosen)).select(pk)
+    cands = index_df.filter(F.expr(sql_in(FEATURE_COL, chosen))).select(pk)
     return radius_scan(
         df, vector_col, query, radius, dn,
         prefilter=cands, pk=pk, limit=limit, ordered=ordered,

@@ -17,7 +17,8 @@ ephemeral DataFrame and every query rebuilt the index inline — full scan
   ECPPartitioner.scala:99-103 partition-skipping, expressed as data
   layout instead of a custom Partitioner).
 * ``load_index`` → (index_df, meta) from storage; no rebuild, no
-  training, no full-data scan.
+  training, no full-data scan — and, per catalog generation, one
+  DataFrame reused across queries (no re-listing, no schema inference).
 * staleness: inserts bump the entity version which flags every index
   stale (catalog.bump_version); stale indexes still serve with a warning
   (Index.scala:222-227) unless ``allow_stale=False``.
@@ -248,7 +249,12 @@ def _recover_index_dir(path: str) -> None:
 def load_index(
     spark: SparkSession, catalog: Catalog, name: str, allow_stale: bool = True
 ) -> tuple[DataFrame, dict[str, Any]]:
-    """Persisted (index_df, meta); stale indexes warn (Index.scala:222-227)."""
+    """Persisted (index_df, meta); stale indexes warn (Index.scala:222-227).
+
+    The index DataFrame is reused per catalog generation
+    (:meth:`Catalog.relation`): repeated queries neither re-list the
+    index files nor re-infer their schema (a Spark job) until a catalog
+    write — every rebuild, append or drop records one."""
     rec = catalog.index(name)
     if rec.get("stale"):
         msg = f"index {name!r} is stale (entity changed since build)"
@@ -256,7 +262,17 @@ def load_index(
             raise RuntimeError(msg)
         warnings.warn(msg, stacklevel=2)
     _recover_index_dir(catalog.index_path(name))
-    meta = dict(rec["meta"])
+    df = catalog.relation(
+        spark, ("index", name), lambda: _read_index(spark, catalog, name),
+        valid=lambda: not rec["meta"].get("buckets")
+        or spark.catalog.tableExists(_bucket_table_name(name)),
+    )
+    return df, dict(rec["meta"])
+
+
+def _read_index(spark: SparkSession, catalog: Catalog, name: str) -> DataFrame:
+    rec = catalog.index(name)
+    meta = rec["meta"]
     path = catalog.index_path(name)
     if meta.get("buckets"):
         # read through the session catalog so the optimizer SEES the
@@ -286,7 +302,7 @@ def load_index(
         from adampro_spark.index.ivfpq import CELL_COL
 
         df = df.withColumn(CELL_COL, F.col(CELL_COL).cast("int"))
-    return df, meta
+    return df
 
 
 def drop_index(catalog: Catalog, name: str) -> None:

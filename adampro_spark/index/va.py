@@ -45,6 +45,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adampro_spark.functions.distances import sql_int_array
+
 FEATURE_COL = "ap_indexfeature"
 LBOUND_COL = "ap_lbound"
 UBOUND_COL = "ap_ubound"
@@ -274,19 +276,19 @@ def _bounds(
     return offsets, lb_flat, ub_flat
 
 
-def _bound_sum(offsets: list[int], flat: Column) -> Column:
+def _bound_sum(offsets: list[int], flat: str) -> Column:
     """Σ_d boundtable[offset_d + cell_d] as a codegen'd expression
     (the reference's cellsDistUDF, VAIndex.scala:75-88).
 
-    ``flat`` is a LUT column (attach_lut) — the bound table is ~dims·cells
-    (8k+) doubles, far past the py4j-literal threshold.  ``offsets`` is
-    dims-sized, fine as a literal.
+    ``flat`` names a LUT column (attach_lut) — the bound table is
+    ~dims·cells (8k+) doubles, too big to inline into every plan.  The
+    dims-sized ``offsets`` ride in the expression text as one array
+    literal, so building the sum is one JVM call at any dimension.
     """
-    off_lit = F.lit([int(o) for o in offsets])
-    terms = F.zip_with(
-        F.col(FEATURE_COL), off_lit, lambda c, o: F.element_at(flat, o + c + 1)
+    return F.expr(
+        f"aggregate(zip_with({FEATURE_COL}, {sql_int_array(offsets)}, "
+        f"(c, o) -> element_at({flat}, o + c + 1)), 0.0D, (acc, x) -> acc + x)"
     )
-    return F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def scan_va(
@@ -318,9 +320,10 @@ def scan_va(
         _ap_lbt=[float(x) for x in lb_flat],
         _ap_ubt=[float(x) for x in ub_flat],
     )
-    bounded = df.withColumn(
-        LBOUND_COL, _bound_sum(offsets, F.col("_ap_lbt"))
-    ).withColumn(UBOUND_COL, _bound_sum(offsets, F.col("_ap_ubt")))
+    bounded = df.withColumns({
+        LBOUND_COL: _bound_sum(offsets, "_ap_lbt"),
+        UBOUND_COL: _bound_sum(offsets, "_ap_ubt"),
+    })
 
     # NULL-feature rows (NULL source vectors) sort FIRST ascending and
     # would consume limit(k) slots while max() ignores them — shrinking

@@ -207,3 +207,4 @@ def repartition_index(
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)
+    catalog.record_rewrite("indexes", name)

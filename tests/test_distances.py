@@ -6,6 +6,7 @@ values — same formulas as query/distance/*.scala.
 """
 
 import math
+import struct
 
 import numpy as np
 import pytest
@@ -61,14 +62,27 @@ def np_expected(name, v, q, w=None):
         return float(d.max() - d.min())
     if name == "modulo":
         return float(np.sum(wt * np.mod(v, q)))
+    if name == "minkowski":
+        return float(np.sum(wt * np.abs(v - q) ** 3) ** (1 / 3))
+    if name == "haversine":
+        lat1, lat2 = np.radians(np.clip([v[0], q[0]], -90, 90))
+        lng1, lng2 = np.radians([(x % 360 + 360) % 360 for x in (v[1], q[1])])
+        lng1, lng2 = [x - 2 * np.pi if x >= np.pi else x for x in (lng1, lng2)]
+        a = (
+            np.sin((lat2 - lat1) / 2) ** 2
+            + np.cos(lat1) * np.cos(lat2) * np.sin((lng2 - lng1) / 2) ** 2
+        )
+        return float(2 * 6371000.0 * np.arctan2(np.sqrt(a), np.sqrt(1 - a)))
     raise ValueError(name)
 
 
 WEIGHTED = {
     "manhattan", "euclidean", "squaredeuclidean", "chebyshev",
-    "chisquared", "hamming", "modulo",
+    "chisquared", "hamming", "modulo", "minkowski",
 }
-ALL = sorted(set(D.DISTANCES) - {"haversine"})
+# all 14: the 13-entry registry plus minkowski (p=3 here)
+ALL = sorted(D.DISTANCES) + ["minkowski"]
+TOL = {"haversine": 1e-3}  # metres over ~100 km spans
 
 
 @pytest.fixture(scope="module")
@@ -77,28 +91,100 @@ def vec_df(spark):
     return spark.createDataFrame(rows, "id long, vec array<float>").cache()
 
 
+def _p(name):
+    return 3.0 if name == "minkowski" else None
+
+
 @pytest.mark.parametrize("name", ALL)
 def test_unweighted(spark, vec_df, name):
     got = {
         r["id"]: r["d"]
-        for r in vec_df.select("id", D.distance(name, "vec", list(Q)).alias("d")).collect()
-    }
-    for i in range(N):
-        exp = np_expected(name, VECS[i], Q)
-        assert got[i] == pytest.approx(exp, abs=1e-4), f"{name} row {i}"
-
-
-@pytest.mark.parametrize("name", sorted(WEIGHTED))
-def test_weighted(spark, vec_df, name):
-    got = {
-        r["id"]: r["d"]
         for r in vec_df.select(
-            "id", D.distance(name, "vec", list(Q), weights=list(W)).alias("d")
+            "id", D.distance(name, "vec", list(Q), p=_p(name)).alias("d")
         ).collect()
     }
     for i in range(N):
-        exp = np_expected(name, VECS[i], Q, W)
-        assert got[i] == pytest.approx(exp, abs=1e-4), f"{name} row {i}"
+        exp = np_expected(name, VECS[i], Q)
+        assert got[i] == pytest.approx(exp, abs=TOL.get(name, 1e-4)), f"{name} row {i}"
+
+
+@pytest.mark.parametrize("name", ALL)
+def test_weighted(spark, vec_df, name):
+    """Weighted call for every distance; the ones the reference computes
+    without weights must ignore them."""
+    got = {
+        r["id"]: r["d"]
+        for r in vec_df.select(
+            "id", D.distance(name, "vec", list(Q), weights=list(W), p=_p(name)).alias("d")
+        ).collect()
+    }
+    w = W if name in WEIGHTED else None
+    for i in range(N):
+        exp = np_expected(name, VECS[i], Q, w)
+        assert got[i] == pytest.approx(exp, abs=TOL.get(name, 1e-4)), f"{name} row {i}"
+
+
+def _bits(x):
+    return "nan" if math.isnan(x) else struct.pack(">d", x)
+
+
+EDGE_VALUES = [
+    0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308,
+    1.7976931348623157e308, -1.7976931348623157e308, 0.1, 1e-7, -123456789.125,
+    *[float(x) for x in VECS[0]],  # float32-derived
+    float(np.float32(1 / 3)), float("nan"), float("inf"), float("-inf"),
+]
+
+
+def test_array_literal_round_trips_bit_exact(spark):
+    """One ``array(...)`` literal carries every double bit-for-bit —
+    the same values ``F.lit`` would send element by element."""
+    row = spark.range(1).select(
+        F.expr(D.sql_array(EDGE_VALUES)).alias("sql"),
+        F.array(*[F.lit(x) for x in EDGE_VALUES]).alias("lit"),
+    ).first()
+    want = [_bits(x) for x in EDGE_VALUES]
+    assert [_bits(x) for x in row["sql"]] == want
+    assert [_bits(x) for x in row["lit"]] == want
+
+
+QUOTED_SCHEMA = (
+    "id long, `my vec` array<float>, `we``ird` array<float>, "
+    "`a.b` array<float>, a struct<b: array<float>>, x array<float>"
+)
+
+
+@pytest.fixture(scope="module")
+def quoted_df(spark):
+    rows = [
+        (int(i), *[[float(v) * s for v in VECS[i]] for s in (1, 2, 3)],
+         ([float(v) * 4 for v in VECS[i]],), [float(v) * 5 for v in VECS[i]])
+        for i in range(N)
+    ]
+    return spark.createDataFrame(rows, QUOTED_SCHEMA).cache()
+
+
+@pytest.mark.parametrize("name", ["my vec", "`we``ird`", "`a.b`", "a.b", "`a`.`b`", "x"])
+@pytest.mark.parametrize("dist", ["euclidean", "correlation"])
+def test_column_names_resolve_like_f_col(quoted_df, name, dist):
+    """A column name with a space, a backtick or a dot reaches the same
+    column ``F.col`` reaches (``a.b`` is the struct field, ```a.b``` the
+    flat column), and a column named like a lambda variable is not
+    captured by one."""
+    rows = quoted_df.select(
+        "id", F.col(name).alias("v"), D.distance(dist, name, list(Q)).alias("d")
+    ).collect()
+    for r in rows:
+        exp = np_expected(dist, np.array(r["v"], dtype=np.float32), Q)
+        assert r["d"] == pytest.approx(exp, abs=1e-4), (name, r["id"])
+
+
+@pytest.mark.parametrize("bad", ["a`b", "a..b", "a.", "`a", ".a", "`a`b"])
+def test_malformed_column_names_fail_like_f_col(quoted_df, bad):
+    with pytest.raises(Exception):
+        quoted_df.select(F.col(bad)).collect()
+    with pytest.raises(Exception):
+        quoted_df.select(D.euclidean(bad, list(Q))).collect()
 
 
 def test_zero_weights_give_zero(spark, vec_df):

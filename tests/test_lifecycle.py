@@ -540,3 +540,177 @@ def test_catalog_concurrent_process_writes_never_tear(tmp_path):
     with open(cat.path) as f:
         data = json.load(f)  # must never be torn
     assert "e" in data["entities"]
+
+
+# ---------------------------------------------------------------------------
+# relation reuse: a cached entity/index DataFrame must never outlive a write
+# ---------------------------------------------------------------------------
+
+_INV_DIM = 8
+_INV_Q = [0.1 * ((i * 5) % 11) for i in range(_INV_DIM)]
+
+
+def _inv_rows(spark, lo, n):
+    import numpy as np
+
+    x = np.random.RandomState(lo).rand(n, _INV_DIM).astype(np.float32)
+    return spark.createDataFrame(
+        [(lo + i, (lo + i) % 3, [float(v) for v in x[i]]) for i in range(n)],
+        "vid long, label int, feature array<float>",
+    )
+
+
+def _answers(ops):
+    """Every read path the kNN session uses, collected exactly."""
+    def rows(df):
+        return sorted((r["vid"], r[DISTANCE_COL]) for r in df.collect())
+
+    out = [rows(ops.query.sequential("inv", "feature", _INV_Q, 7))]
+    for name in ops.index.list("inv"):
+        out.append(rows(ops.query.index(name, _INV_Q, 7)))
+    out.append(rows(ops.query.knn(
+        "inv", "feature", _INV_Q, 7, hints=("vaf", "exact"),
+        predicates=[("label", "=", [1])],
+    )[0]))
+    out.append(ops.entity.count("inv"))
+    return out
+
+
+@pytest.mark.filterwarnings("ignore:index .* is stale")
+def test_cached_relations_follow_every_write(spark, tmp_path):
+    """After each write, a query through the SAME AdamOps (whose entity
+    and index relations are cached per catalog generation) must answer
+    exactly like a fresh AdamOps — never from the old file listing
+    (stale rows, or a FileNotFoundException on replaced files)."""
+    import subprocess
+    import sys
+
+    base = str(tmp_path / "inv")
+    ops = AdamOps(spark, base)
+    ops.entity.create("inv", [("vid", "long"), ("label", "int"), ("feature", "vector")])
+    ops.entity.insert("inv", _inv_rows(spark, 0, 120))
+    ops.index.create("inv_vaf", "inv", "feature", "vaf")
+    ops.index.create("inv_ecp", "inv", "feature", "ecp")
+
+    def check(step):
+        assert _answers(ops) == _answers(AdamOps(spark, base)), step
+
+    check("build")
+    ops.entity.insert("inv", _inv_rows(spark, 1000, 30))
+    check("insert")
+    ops.entity.delete("inv", [("label", "=", [2])])
+    check("delete")
+    ops.entity.vacuum("inv", num_partitions=2)
+    check("vacuum")
+    ops.entity.bucketize("inv", 3)
+    check("bucketize")
+    spark.sql("DROP TABLE IF EXISTS adam_bucketed_inv")  # as a new session sees it
+    check("bucketed table re-registered")
+    ops.entity.debucketize("inv")
+    check("debucketize")
+    ops.entity.transfer("inv", "orc", location=str(tmp_path / "inv_orc"))
+    check("transfer out")
+    ops.entity.transfer("inv", "parquet")
+    check("transfer back")
+    ops.index.create("inv_vaf", "inv", "feature", "vaf")
+    check("index re-created over the same name")
+    ops.entity.insert("inv", _inv_rows(spark, 2000, 20))
+    fresh = ops.entity.get("inv").df().filter(F.col("vid") >= 2000)
+    ops.index.append("inv_ecp", fresh)
+    check("index append")
+    ops.index.drop("inv_ecp")
+    check("index drop")
+    ops.index.create("inv_ecp", "inv", "feature", "ecp")
+    check("index recreate")
+    AdamOps(spark, base).entity.insert("inv", _inv_rows(spark, 3000, 10))
+    check("write through a second catalog")
+
+    # another process compacts the entity files and records the rewrite
+    script = (
+        "import os, shutil, sys\n"
+        "import pyarrow.parquet as pq\n"
+        "from adampro_spark.catalog import Catalog\n"
+        "cat = Catalog(sys.argv[1])\n"
+        "path = cat.entity_path('inv')\n"
+        "table = pq.read_table(path)\n"
+        "os.makedirs(path + '_tmp')\n"
+        "pq.write_table(table, os.path.join(path + '_tmp', 'part-0.parquet'))\n"
+        "os.rename(path, path + '_old')\n"
+        "os.rename(path + '_tmp', path)\n"
+        "shutil.rmtree(path + '_old')\n"
+        "cat.record_rewrite('entities', 'inv')\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", script, base], cwd=root, check=True)
+    check("write from another process")
+
+    # threaded batch_query right after a write: every concurrent query
+    # sees the new generation
+    ops.entity.insert("inv", _inv_rows(spark, 4000, 10))
+    specs = [
+        dict(entity="inv", attribute="feature", query=_INV_Q, k=7, hints=hints, pk="vid")
+        for hints in (("sequential",), ("vaf", "exact"), ("ecp",), ("exact",))
+    ]
+    obs = ops.query.batch_query(specs)
+    assert all(o.error is None for o in obs)
+    fresh_ops = AdamOps(spark, base)
+    for o, spec in zip(obs, specs):
+        want = fresh_ops.query.knn(**spec)[0].collect()
+        assert [(r["vid"], r[DISTANCE_COL]) for r in o.rows] == [
+            (r["vid"], r[DISTANCE_COL]) for r in want
+        ]
+
+    ops.entity.sparsify("inv", "feature")
+    check("sparsify")
+
+
+def test_catalog_parse_cache_hands_out_private_copies(tmp_path):
+    """Cached parses must not alias: mutating one reader's record leaves
+    the next reader's untouched, and a write is visible immediately."""
+    from adampro_spark.catalog import Catalog
+
+    cat = Catalog(str(tmp_path / "pc"))
+    cat.create_entity("e", [{"name": "x", "type": "long"}])
+    cat.entity("e")["attributes"].append({"name": "junk", "type": "int"})
+    assert cat.entity("e")["attributes"] == [{"name": "x", "type": "long"}]
+    gen = cat.generation()
+    Catalog(cat.base).update_entity("e", tuple_count=5)
+    assert cat.generation() != gen
+    assert cat.entity("e")["tuple_count"] == 5
+
+
+def test_catalog_parse_cache_under_threads(tmp_path):
+    """Readers and writers hammering one Catalog from more threads than
+    cores: no reader ever sees another reader's mutation (copies stay
+    private) and the cache ends on the last write."""
+    import sys
+    import threading
+
+    from adampro_spark.catalog import Catalog
+
+    cat = Catalog(str(tmp_path / "tc"))
+    cat.create_entity("e", [{"name": "x", "type": "long"}])
+    leaks = []
+
+    def work(tid):
+        for i in range(40):
+            if i % 4 == 0:
+                cat.update_entity("e", v=tid * 1000 + i)
+            rec = cat.entity("e")
+            if any(k.startswith("mine_") for k in rec):
+                leaks.append(tid)
+            rec[f"mine_{tid}"] = i
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not leaks
+    assert cat.entity("e") == Catalog(cat.base).entity("e")

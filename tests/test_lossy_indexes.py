@@ -16,11 +16,8 @@ from adampro_spark.index import (
     build_sh, sh_knn,
     build_vaplus, vaplus_knn,
 )
-from adampro_spark.operators.scan import sequential_scan
-from tests.test_golden_knn import GT, load_expected, load_fixture, load_query
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(GT), reason="reference groundtruth fixture not available"
+from tests.test_golden_knn import (
+    GT, euclidean_truth, load_expected, load_fixture, load_query,
 )
 
 K = 100
@@ -79,6 +76,16 @@ def test_mi(spark, gt_df, golden):
     )
 
 
+@pytest.mark.xfail(
+    not os.path.exists(GT),
+    strict=True,
+    reason=(
+        "known LSH recall miss: on the seeded fixture the default 16x8 "
+        "manhattan LSH index misses the true nearest neighbour (tid 1513) "
+        "and returns the second (tid 1738); the top-1 bar holds on the "
+        "reference fixture.  Open item on ROADMAP."
+    ),
+)
 def test_lsh(spark, gt_df, golden):
     idx, meta = build_lsh(gt_df, "vectorfield", pk="tid", distance_name="manhattan")
     idx = idx.cache()
@@ -93,30 +100,25 @@ def test_lsh(spark, gt_df, golden):
 
 
 def test_sh(spark, gt_df, golden_euclidean=None):
-    # SH is Euclidean-only: compare against brute-force euclidean top-k
+    # SH is Euclidean-only: compare against the exact euclidean top-k
     q = load_query()
-    brute = sequential_scan(
-        gt_df, "vectorfield", q, K, "euclidean", pk="tid"
-    ).collect()
+    truth = euclidean_truth(K)
     idx, meta = build_sh(gt_df, "vectorfield", pk="tid")
     res = sh_knn(gt_df, "vectorfield", idx, meta, q, K).collect()
-    assert res[0]["tid"] == brute[0]["tid"]
+    assert res[0]["tid"] == truth[0][1]
     got = {r["tid"] for r in res}
-    want = {r["tid"] for r in brute}
+    want = {tid for _, tid in truth}
     r = len(got & want) / len(want)
     assert r >= 0.3, f"SH recall {r:.2f}"
 
 
 def test_vaplus(spark, gt_df):
     q = load_query()
-    brute = sequential_scan(
-        gt_df, "vectorfield", q, K, "euclidean", pk="tid"
-    ).collect()
     idx, meta = build_vaplus(gt_df, "vectorfield", pk="tid")
     res = vaplus_knn(gt_df, "vectorfield", idx, meta, q, K).collect()
     # VA+ refines on original vectors; with valid rotated bounds it is
     # exact in practice — assert full agreement
-    assert [r["tid"] for r in res] == [r["tid"] for r in brute]
+    assert [r["tid"] for r in res] == [tid for _, tid in euclidean_truth(K)]
 
 
 def test_index_counts_match_entity(spark, gt_df):

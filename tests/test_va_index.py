@@ -6,17 +6,13 @@ VAF/VAV against the same golden file as the sequential scan
 (QueryTestSuite.scala:111-160).
 """
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
 from adampro_spark.index.va import build_va, scan_va, va_knn
 from adampro_spark.operators.scan import sequential_scan
-from tests.test_golden_knn import GT, load_expected, load_fixture, load_query
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(GT), reason="reference groundtruth fixture not available"
+from tests.test_golden_knn import (
+    euclidean_truth, load_expected, load_fixture, load_query,
 )
 
 
@@ -99,6 +95,10 @@ def test_va_euclidean_exact(spark, gt_df):
     assert [(r["tid"], round(r["ap_distance"], 6)) for r in via_index] == [
         (r["tid"], round(r["ap_distance"], 6)) for r in brute
     ]
+    truth = euclidean_truth(50)
+    assert [r["tid"] for r in via_index] == [tid for _, tid in truth]
+    for r, (dist, _) in zip(via_index, truth):
+        assert r["ap_distance"] == pytest.approx(dist, abs=1e-4)
 
 
 def test_va_prefilter(spark, gt_df):

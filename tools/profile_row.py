@@ -28,31 +28,8 @@ SF_DIR = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
 def main() -> None:
     evdir = tempfile.mkdtemp(prefix="spark-ev-")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-
-    SparkSession.builder.config("spark.eventLog.enabled", "true").config(
-        "spark.eventLog.dir", evdir
-    )
-    # get_spark reuses builder config via getOrCreate only if set on the
-    # same builder — easiest: pre-seed via env-level default conf
-    from adampro_spark import session as S
-
-    orig = S.get_spark
-
-    def patched(app_name="adampro-profile", master=None):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        sp = (
-            SparkSession.builder.appName(app_name)
-            .master(master or f"local[{cpus}]")
-            .config("spark.eventLog.enabled", "true")
-            .config("spark.eventLog.dir", evdir)
-        )
-        # merge the house config
-        b = orig.__wrapped__ if hasattr(orig, "__wrapped__") else None
-        return sp.getOrCreate()
-
-    # simpler: call the house factory but with eventLog configs injected
-    # through spark.driver.* defaults — monkeypatch the builder call
+    # inject the event-log configs into every SparkSession.Builder that
+    # get_spark() creates
     import pyspark.sql.session as pss
 
     real_builder_cls = pss.SparkSession.Builder
@@ -87,7 +64,6 @@ def main() -> None:
             spark.catalog.clearCache()
 
         appid = spark.sparkContext.applicationId
-        marker = spark.sparkContext  # flush point
         t0 = time.perf_counter()
         fn(spark, SF_DIR).collect()
         wall = time.perf_counter() - t0
