@@ -23,6 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from adampro_spark.caching import CacheScope
 from adampro_spark.functions.distances import sql_array, sql_in
 from adampro_spark.index._util import (
     argmin_expr,
@@ -113,7 +114,30 @@ def build_ecp(
     ``centroid_leaders=True`` recomputes each leader as its cluster
     centroid (:56-71) with a posexplode + groupBy (one shuffle of
     n·dim rows — the reference's mapGroups shuffles full vectors too).
+
+    The index table comes back materialized (eager localCheckpoint) and
+    the assignment cache released; ``create_index`` writes the lazy
+    table inside its own block instead.
     """
+    with CacheScope() as scope:
+        indexed, meta = _build_ecp(
+            scope, df, vector_col, pk, distance_name, nleaders,
+            centroid_leaders, seed, autofit,
+        )
+        return indexed.localCheckpoint(eager=True), meta
+
+
+def _build_ecp(
+    scope: CacheScope,
+    df: DataFrame,
+    vector_col: str,
+    pk: str = "ap_id",
+    distance_name: str = "euclidean",
+    nleaders: int | None = None,
+    centroid_leaders: bool = False,
+    seed: int = 42,
+    autofit: bool = True,
+) -> tuple[DataFrame, dict[str, Any]]:
     from adampro_spark.index._util import attach_lut
 
     df = df.filter(F.col(vector_col).isNotNull())  # NULL vectors: no cell
@@ -135,23 +159,21 @@ def build_ecp(
         first minimum, identical tie-break to argmin_expr), so the
         ≤200-leader HOF evaluates twice per row in one pass instead of
         ~5× across the old assign + stats scans (round 13; measured
-        14.0 s → see COVERAGE for the sf1 build).  Persisted as the
-        barrier both consumers (the index table, the stats aggregate)
-        read."""
+        14.0 s → see COVERAGE for the sf1 build).  Kept as the barrier
+        both consumers (the index table, the stats aggregate) read."""
         dists = ref_dists_expr(vector_col, F.col("_ap_leaders"), distance_name)
         best = F.array_min(
             F.transform(dists, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
         )
-        return wl_.select(
-            pk,
-            best["i"].cast("int").alias(FEATURE_COL),
-            best["d"].alias("_ap_dmin"),
-        ).persist()
+        return scope.keep(
+            wl_.select(
+                pk,
+                best["i"].cast("int").alias(FEATURE_COL),
+                best["d"].alias("_ap_dmin"),
+            )
+        )
 
     wl, cell = _assign(leaders)
-    assigned = _assign_once(wl)
-    indexed = assigned.select(pk, FEATURE_COL)
-
     if centroid_leaders:
         cent = (
             wl.select(
@@ -166,11 +188,9 @@ def build_ecp(
         )
         for r in cent:
             leaders[r[FEATURE_COL]] = [s["m"] for s in r["c"]]
-        # re-assign to the moved leaders
-        assigned.unpersist()
+        # assign to the moved leaders
         wl, cell = _assign(leaders)
-        assigned = _assign_once(wl)
-        indexed = assigned.select(pk, FEATURE_COL)
+    assigned = _assign_once(wl)
 
     # stats off the SAME persisted assignment pass: per-cell population
     # AND per-cell max member-to-leader distance (the cell RADIUS —
@@ -182,12 +202,7 @@ def build_ecp(
         .agg(F.count("*").alias("cnt"), F.max("_ap_dmin").alias("rad"))
         .collect()
     }
-    # release the fused-assignment cache (ADVICE r13: repeated builds
-    # accumulated session-lifetime cached partitions) — the index-table
-    # consumer reads a slim materialized (pk, cell) checkpoint instead,
-    # so unpersisting costs no recompute
-    indexed = assigned.select(pk, FEATURE_COL).localCheckpoint(eager=True)
-    assigned.unpersist()
+    indexed = assigned.select(pk, FEATURE_COL)
     meta = {
         "type": "ecp",
         "pk": pk,
@@ -236,7 +251,19 @@ def ecp_append(
     is a rebuild).  The ``frac`` scale-proportional probe budget reads
     the refreshed counts, so probes stay proportional as the corpus
     grows.  :func:`adampro_spark.index.persist.append_index` wraps this
-    with the parquet append + catalog refresh + staleness clear."""
+    with the parquet append + catalog refresh + staleness clear, written
+    inside its block; called directly, the rows come back materialized."""
+    with CacheScope() as scope:
+        indexed, out = _ecp_append(scope, new_df, vector_col, meta)
+        return indexed.localCheckpoint(eager=True), out
+
+
+def _ecp_append(
+    scope: CacheScope,
+    new_df: DataFrame,
+    vector_col: str,
+    meta: "dict[str, Any]",
+) -> "tuple[DataFrame, dict[str, Any]]":
     from adampro_spark.index._util import attach_lut
 
     if meta.get("type") != "ecp":
@@ -253,19 +280,20 @@ def ecp_append(
     best = F.array_min(
         F.transform(dists, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
     )
-    assigned = wl.select(
-        pk,
-        best["i"].cast("int").alias(FEATURE_COL),
-        best["d"].alias("_ap_dmin"),
-    ).persist()
+    assigned = scope.keep(
+        wl.select(
+            pk,
+            best["i"].cast("int").alias(FEATURE_COL),
+            best["d"].alias("_ap_dmin"),
+        )
+    )
     stats = {
         int(r[FEATURE_COL]): (int(r["cnt"]), float(r["rad"]))
         for r in assigned.groupBy(FEATURE_COL)
         .agg(F.count("*").alias("cnt"), F.max("_ap_dmin").alias("rad"))
         .collect()
     }
-    indexed = assigned.select(pk, FEATURE_COL).localCheckpoint(eager=True)
-    assigned.unpersist()
+    indexed = assigned.select(pk, FEATURE_COL)
     out = dict(meta)
     out["counts"] = [
         int(c) + stats.get(i, (0, 0.0))[0]

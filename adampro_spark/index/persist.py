@@ -32,6 +32,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adampro_spark.caching import CacheScope
 from adampro_spark.catalog import Catalog
 
 FEATURE_COL = "ap_indexfeature"
@@ -40,31 +41,30 @@ _BUILDERS = {}
 
 
 def _builders():
-    """Lazy import to avoid index-module import cycles."""
+    """Lazy import to avoid index-module import cycles.  Every builder
+    takes the ``create_index`` block first: the builders that cache an
+    intermediate keep it there until the index table is written."""
     global _BUILDERS
     if not _BUILDERS:
         from adampro_spark import index as IX
+        from adampro_spark.index.ecp import _build_ecp
         from adampro_spark.index.va import build_va
+        from adampro_spark.index.vaplus import _build_vaplus
+        from adampro_spark.operators.fulltext import _build_text_index
 
         _BUILDERS = {
-            "vaf": lambda df, col, pk, **kw: build_va(df, col, pk=pk, index_type="vaf", **kw),
-            "vav": lambda df, col, pk, **kw: build_va(df, col, pk=pk, index_type="vav", **kw),
-            "vaplus": lambda df, col, pk, **kw: IX.build_vaplus(df, col, pk=pk, **kw),
-            "ecp": lambda df, col, pk, **kw: IX.build_ecp(df, col, pk=pk, **kw),
-            "ivfpq": lambda df, col, pk, **kw: IX.build_ivfpq(df, col, pk=pk, **kw),
-            "pq": lambda df, col, pk, **kw: IX.build_pq(df, col, pk=pk, **kw),
-            "lsh": lambda df, col, pk, **kw: IX.build_lsh(df, col, pk=pk, **kw),
-            "sh": lambda df, col, pk, **kw: IX.build_sh(df, col, pk=pk, **kw),
-            "mi": lambda df, col, pk, **kw: IX.build_mi(df, col, pk=pk, **kw),
-            "fulltext": lambda df, col, pk, **kw: _build_fulltext(df, col, pk, **kw),
+            "vaf": lambda scope, df, col, pk, **kw: build_va(df, col, pk=pk, index_type="vaf", **kw),
+            "vav": lambda scope, df, col, pk, **kw: build_va(df, col, pk=pk, index_type="vav", **kw),
+            "vaplus": lambda scope, df, col, pk, **kw: _build_vaplus(scope, df, col, pk=pk, **kw),
+            "ecp": lambda scope, df, col, pk, **kw: _build_ecp(scope, df, col, pk=pk, **kw),
+            "ivfpq": lambda scope, df, col, pk, **kw: IX.build_ivfpq(df, col, pk=pk, **kw),
+            "pq": lambda scope, df, col, pk, **kw: IX.build_pq(df, col, pk=pk, **kw),
+            "lsh": lambda scope, df, col, pk, **kw: IX.build_lsh(df, col, pk=pk, **kw),
+            "sh": lambda scope, df, col, pk, **kw: IX.build_sh(df, col, pk=pk, **kw),
+            "mi": lambda scope, df, col, pk, **kw: IX.build_mi(df, col, pk=pk, **kw),
+            "fulltext": lambda scope, df, col, pk, **kw: _build_text_index(scope, df, col, pk=pk, **kw),
         }
     return _BUILDERS
-
-
-def _build_fulltext(df, col, pk, **kw):
-    from adampro_spark.operators.fulltext import build_text_index
-
-    return build_text_index(df, col, pk=pk, **kw)
 
 
 def index_types() -> list[str]:
@@ -108,36 +108,39 @@ def create_index(
     if builder is None:
         raise ValueError(f"unknown index type {index_type!r}; one of {index_types()}")
 
-    index_df, meta = builder(df, attribute, pk, **build_kwargs)
-    path = catalog.index_path(name)
-
     if buckets is None and catalog.exists_entity(entity):
         buckets = catalog.entity(entity).get("buckets")
-    if buckets and index_type != "ecp":
-        import shutil
+    path = catalog.index_path(name)
+    # one block across build and write: the builder's caches feed the
+    # write, and are released once the table is in storage
+    with CacheScope() as scope:
+        index_df, meta = builder(scope, df, attribute, pk, **build_kwargs)
+        if buckets and index_type != "ecp":
+            import shutil
 
-        tbl = _bucket_table_name(name)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(path, ignore_errors=True)
-        (
-            index_df.repartition(int(buckets), pk)
-            .write.bucketBy(int(buckets), pk)
-            .sortBy(pk)
-            .option("path", path)
-            .saveAsTable(tbl)
-        )
-        meta = dict(meta)
-        meta["buckets"] = int(buckets)
-    else:
-        writer = index_df.write.mode("overwrite")
-        if index_type == "ecp":
-            # cell id as a partition column → Parquet partition pruning on
-            # the scan's `cell IN (...)` filter (ECPPartitioner.scala:99-103)
-            writer = writer.partitionBy(FEATURE_COL)
-        elif index_type == "ivfpq":
-            from adampro_spark.index.ivfpq import CELL_COL
-            writer = writer.partitionBy(CELL_COL)
-        writer.parquet(path)
+            tbl = _bucket_table_name(name)
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            shutil.rmtree(path, ignore_errors=True)
+            (
+                index_df.repartition(int(buckets), pk)
+                .write.bucketBy(int(buckets), pk)
+                .sortBy(pk)
+                .option("path", path)
+                .saveAsTable(tbl)
+            )
+            meta = dict(meta)
+            meta["buckets"] = int(buckets)
+        else:
+            writer = index_df.write.mode("overwrite")
+            if index_type == "ecp":
+                # cell id as a partition column → Parquet partition pruning
+                # on the scan's `cell IN (...)` filter
+                # (ECPPartitioner.scala:99-103)
+                writer = writer.partitionBy(FEATURE_COL)
+            elif index_type == "ivfpq":
+                from adampro_spark.index.ivfpq import CELL_COL
+                writer = writer.partitionBy(CELL_COL)
+            writer.parquet(path)
 
     catalog.register_index(name, entity, attribute, index_type, meta)
     return load_index(spark, catalog, name)
@@ -185,7 +188,7 @@ def append_index(
     itype = rec["type"]
     part_col = None
     if itype == "ecp":
-        from adampro_spark.index.ecp import ecp_append as _append
+        from adampro_spark.index.ecp import _ecp_append as _append
 
         part_col = FEATURE_COL
     elif itype == "ivfpq":
@@ -194,7 +197,7 @@ def append_index(
     elif itype in ("vaf", "vav"):
         from adampro_spark.index.va import va_append as _append
     elif itype == "vaplus":
-        from adampro_spark.index.vaplus import vaplus_append as _append
+        from adampro_spark.index.vaplus import _vaplus_append as _append
     elif itype == "lsh":
         from adampro_spark.index.lsh import lsh_append as _append
     elif itype == "sh":
@@ -210,24 +213,30 @@ def append_index(
             f"documents and need a rebuild)"
         )
 
-    indexed, new_meta = _append(new_df, rec["attribute"], rec["meta"])
     path = catalog.index_path(name)
     buckets = rec["meta"].get("buckets")
-    if part_col is not None:
-        indexed.write.mode("append").partitionBy(part_col).parquet(path)
-    elif buckets:
-        pk = rec["meta"]["pk"]
-        tbl = _bucket_table_name(name)
-        (
-            indexed.repartition(int(buckets), pk)
-            .write.mode("append")
-            .bucketBy(int(buckets), pk)
-            .sortBy(pk)
-            .option("path", path)
-            .saveAsTable(tbl)
+    args = (new_df, rec["attribute"], rec["meta"])
+    # one block across encode and write, as in create_index (only the
+    # eCP and VA+ appends keep a cache)
+    with CacheScope() as scope:
+        indexed, new_meta = (
+            _append(scope, *args) if itype in ("ecp", "vaplus") else _append(*args)
         )
-    else:
-        indexed.write.mode("append").parquet(path)
+        if part_col is not None:
+            indexed.write.mode("append").partitionBy(part_col).parquet(path)
+        elif buckets:
+            pk = rec["meta"]["pk"]
+            tbl = _bucket_table_name(name)
+            (
+                indexed.repartition(int(buckets), pk)
+                .write.mode("append")
+                .bucketBy(int(buckets), pk)
+                .sortBy(pk)
+                .option("path", path)
+                .saveAsTable(tbl)
+            )
+        else:
+            indexed.write.mode("append").parquet(path)
     catalog.update_index_fields(name, meta=new_meta, stale=False)
     return load_index(spark, catalog, name)
 

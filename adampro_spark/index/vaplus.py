@@ -25,6 +25,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adampro_spark.caching import CacheScope
 from adampro_spark.index._util import sample_matrix
 from adampro_spark.index.va import (
     FEATURE_COL,
@@ -48,6 +49,25 @@ def _proj_expr(vector_col: str, cols: Column) -> Column:
 
 
 def build_vaplus(
+    df: DataFrame,
+    vector_col: str,
+    pk: str = "ap_id",
+    total_nbits: int | None = None,
+    ntraining: int = 5000,
+    seed: int = 42,
+) -> tuple[DataFrame, dict[str, Any]]:
+    """``(index_df, meta)`` with the index table materialized (eager
+    localCheckpoint) and the build's projection cache released;
+    ``create_index`` writes the lazy table inside its own block."""
+    with CacheScope() as scope:
+        indexed, meta = _build_vaplus(
+            scope, df, vector_col, pk, total_nbits, ntraining, seed
+        )
+        return indexed.localCheckpoint(eager=True), meta
+
+
+def _build_vaplus(
+    scope: CacheScope,
     df: DataFrame,
     vector_col: str,
     pk: str = "ap_id",
@@ -82,13 +102,16 @@ def build_vaplus(
     from adampro_spark.index._util import attach_lut
 
     # cells over the projected vector: project into a temp column first.
-    # PERSIST is load-bearing twice over: (a) _minmax would otherwise
-    # inline the dim² projection into each of its 2·dim aggregates (HOF
-    # lambda bodies don't CSE), (b) the cells select would re-project.
+    # The kept cache is load-bearing twice over: (a) _minmax would
+    # otherwise inline the dim² projection into each of its 2·dim
+    # aggregates (HOF lambda bodies don't CSE), (b) the cells select
+    # would re-project.
     with_pca = attach_lut(df, _ap_pca=eigv.T.tolist())
-    tmp = with_pca.select(
-        F.col(pk), _proj_expr(vector_col, F.col("_ap_pca")).alias("_proj")
-    ).persist()
+    tmp = scope.keep(
+        with_pca.select(
+            F.col(pk), _proj_expr(vector_col, F.col("_ap_pca")).alias("_proj")
+        )
+    )
 
     # EXACT per-dim min/max of the projected FULL data (one map-side
     # aggregate, like va._minmax) — sample-based ranges clamp out-of-range
@@ -162,8 +185,20 @@ def vaplus_append(
     the outer marks to the projected batch envelope (assignment counts
     inner marks only, so existing cells never move — va_append's
     soundness argument), encode, and return ``(new_index_rows,
-    updated_meta)``.  The PCA never refits (that is a rebuild); what
-    drifts is mark equifrequency, never bound exactness."""
+    updated_meta)`` with the rows materialized.  The PCA never refits
+    (that is a rebuild); what drifts is mark equifrequency, never bound
+    exactness."""
+    with CacheScope() as scope:
+        indexed, out = _vaplus_append(scope, new_df, vector_col, meta)
+        return indexed.localCheckpoint(eager=True), out
+
+
+def _vaplus_append(
+    scope: CacheScope,
+    new_df: DataFrame,
+    vector_col: str,
+    meta: "dict[str, Any]",
+) -> "tuple[DataFrame, dict[str, Any]]":
     if meta.get("type") != "vaplus":
         raise ValueError(
             f"vaplus_append needs a vaplus meta, got {meta.get('type')!r}"
@@ -181,21 +216,20 @@ def vaplus_append(
         )
     eigv = np.asarray(meta["pca"], dtype=np.float64)
     with_pca = attach_lut(batch, _ap_pca=eigv.T.tolist())
-    tmp = with_pca.select(
-        F.col(pk), _proj_expr(vector_col, F.col("_ap_pca")).alias("_proj")
-    ).persist()
-    try:
-        mins, maxs = _minmax(tmp, "_proj", dim)
-        marks = [[float(x) for x in mk] for mk in meta["marks"]]
-        for d in range(dim):
-            marks[d][0] = float(min(marks[d][0], mins[d]))
-            marks[d][-1] = float(max(marks[d][-1], maxs[d]))
-        wm = attach_lut(tmp, _ap_marks=marks)
-        indexed = wm.select(
-            pk, _cells_expr("_proj", F.col("_ap_marks")).alias(FEATURE_COL)
-        ).localCheckpoint(eager=True)
-    finally:
-        tmp.unpersist()
+    tmp = scope.keep(
+        with_pca.select(
+            F.col(pk), _proj_expr(vector_col, F.col("_ap_pca")).alias("_proj")
+        )
+    )
+    mins, maxs = _minmax(tmp, "_proj", dim)
+    marks = [[float(x) for x in mk] for mk in meta["marks"]]
+    for d in range(dim):
+        marks[d][0] = float(min(marks[d][0], mins[d]))
+        marks[d][-1] = float(max(marks[d][-1], maxs[d]))
+    wm = attach_lut(tmp, _ap_marks=marks)
+    indexed = wm.select(
+        pk, _cells_expr("_proj", F.col("_ap_marks")).alias(FEATURE_COL)
+    )
     out = dict(meta)
     out["marks"] = marks
     return indexed, out

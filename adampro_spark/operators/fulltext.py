@@ -34,6 +34,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adampro_spark.caching import CacheScope
 from adampro_spark.pipeline.text import tokens_expr
 
 SCORE_COL = "ap_score"  # AttributeNames.scala:16
@@ -81,13 +82,23 @@ def build_text_index(
     lowercased whitespace tokens, count per (doc, term).  One shuffle at
     build (the groupBy), amortized over every query; plugged into the
     shared index lifecycle as type ``"fulltext"`` so create/persist/
-    stale-tracking come from index/persist.py.
+    stale-tracking come from index/persist.py (which writes the table
+    inside its block); called directly, the table comes back
+    materialized.
     """
+    with CacheScope() as scope:
+        postings, meta = _build_text_index(scope, df, text_col, pk)
+        return postings.localCheckpoint(eager=True), meta
+
+
+def _build_text_index(
+    scope: CacheScope, df: DataFrame, text_col: str, pk: str = "ap_id", **_: Any
+) -> tuple[DataFrame, dict[str, Any]]:
     from pyspark.sql import Window
 
     from adampro_spark.index.persist import FEATURE_COL
 
-    postings = (
+    postings = scope.keep(
         df.select(F.col(pk), F.explode(tokens_expr(text_col)).alias(FEATURE_COL))
         .groupBy(pk, FEATURE_COL)
         .agg(F.count(F.lit(1)).cast("double").alias(TF_COL))
@@ -96,7 +107,6 @@ def build_text_index(
         # query time (one window pass at build, +1 column of storage)
         .withColumn(DL_COL, F.sum(TF_COL).over(Window.partitionBy(pk)))
     )
-    postings = postings.persist()
     n_docs, avgdl = (
         postings.select(pk, DL_COL)
         .distinct()
@@ -157,9 +167,7 @@ def text_search_indexed(
     column alone and the ``term IN (...)`` filter pushes into both
     scans, so the second evaluation reads one dictionary-encoded column
     of the index, while a ``persist`` here would pin the full posting
-    payload in executor memory with no release path from this lazy API
-    (the caller can ``index_df.cache()`` once if the index is queried
-    repeatedly — the persisted-index driver row does exactly that).
+    payload in executor memory with no release path from this lazy API.
     """
     from adampro_spark.index.persist import FEATURE_COL
 

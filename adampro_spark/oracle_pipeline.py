@@ -1060,15 +1060,13 @@ def _dedup_resolution(spark, sf):
     corpus = _docs_with_truncated_copies(spark, sf).withColumn(
         "_q", F.length("text").cast("long")
     )
-    # materialize: TWO consumers (both survivor policies) read the pair
-    # set — unpersisted, the whole banding plan would run twice.
-    # max_bucket_size disabled like the ccnet_mh/simhash oracle rows
-    # (review r13): the round-13 banded oracle enumerates FULL bucket
-    # pairs, while the production hot-bucket star guard — whose pair-set
-    # semantics are pytest-pinned — would diverge on a >1024-doc bucket.
-    pairs = minhash_dup_pairs(
-        corpus, threshold=0.7, materialize=True, max_bucket_size=1 << 30
-    )
+    # TWO consumers (both survivor policies) read the checkpointed pair
+    # set.  max_bucket_size disabled like the ccnet_mh/simhash oracle
+    # rows (review r13): the round-13 banded oracle enumerates FULL
+    # bucket pairs, while the production hot-bucket star guard — whose
+    # pair-set semantics are pytest-pinned — would diverge on a
+    # >1024-doc bucket.
+    pairs = minhash_dup_pairs(corpus, threshold=0.7, max_bucket_size=1 << 30)
     minpk = deduplicate(corpus, pairs, pk="doc_id").select(
         F.lit("minpk").alias("part"), "doc_id"
     )
@@ -3219,95 +3217,68 @@ def _ccnet_rows(spark, sf, include_mh: bool = True):
     so the ``pipeline_ccnet`` bench row stays comparable across rounds;
     the minhash composition gets its own ``pipeline_ccnet_mh`` row.
     The DRIVER suite always carries all three parts."""
-    from adampro_spark.pipeline.ccnet import ccnet_pipeline
-    from adampro_spark.pipeline.lm import (
-        fit_unigram_lm, fit_unigram_lm_by, lm_bucket_by,
-    )
+    from adampro_spark.caching import CacheScope
+    from adampro_spark.pipeline.ccnet import _ccnet_lm_buckets, _ccnet_survivors
+    from adampro_spark.pipeline.lm import fit_unigram_lm, lm_token_table
 
     docs = _docs(spark, sf).select("doc_id", "text")
     vocab, meta = fit_unigram_lm(docs, vocab_size=_LM_V)
-    handles: list = []
-    rep: dict = {}
-    # token_table_out (round 16, verdict r15 #4): ONE persisted
-    # (doc_id, lang, tok) explode of the survivors feeds the shared-LM
-    # score AND both per-language legs below — was three tokenize
-    # passes over the same survivor corpus
-    tt: list = []
-    out = ccnet_pipeline(
-        docs, vocab, meta, handles=handles, report_out=rep,
-        token_table_out=tt,
-    )
-    shared = out.select(
-        F.lit("ccnet").alias("model"),
-        "doc_id",
-        "lm_logprob",
-        F.lit(None).cast("long").alias("lm_tokens"),
-        F.concat(F.col("lang_cc"), F.lit("|"), F.col("bucket")).alias(
-            "bucket"
-        ),
-    )
-    # round 10 second part: the PAPER-FAITHFUL per-language mode — one
-    # model per identified language fit on the SAME survivors, each
-    # language bucketed against its own model (fit_unigram_lm_by /
-    # lm_bucket_by); the count hint reuses curate's n_output
-    surv = handles[-1]
-    ex = tt[0] if tt else None
-    vocab_by, metas = fit_unigram_lm_by(
-        surv, by="lang_cc", vocab_size=_LM_V, exploded=ex
-    )
-    pl = lm_bucket_by(
-        surv, vocab_by, metas, by="lang_cc",
-        method="auto", max_group_rows_hint=rep["n_output"], exploded=ex,
-    ).select(
-        F.lit("ccnet_pl").alias("model"),
-        "doc_id",
-        "lm_logprob",
-        F.lit(None).cast("long").alias("lm_tokens"),
-        F.concat(F.col("lang_cc"), F.lit("|"), F.col("bucket")).alias(
-            "bucket"
-        ),
-    )
-    legs = [shared, pl]
-    handles_mh: list = []
-    if include_mh:
-        # round 11 third part (verdict r10 #5): the PRODUCTION dedup
-        # shape — ccnet with near-dup minhash removal (curate_kw routes
-        # curate's dedup stage; threshold 0.8, the curate default).  The
-        # oracle leg is the exact all-pairs Jaccard graph + recursive
-        # components over the gate survivors (the dedup_minhash /
-        # dedup_resolution oracle pattern), so the banded plan's
-        # survivor set is pinned end-to-end inside the composition.
-        # max_bucket_size is disabled like the simhash oracle row: the
-        # hot-bucket star guard is a production bound whose pair-set
-        # semantics are pytest-pinned; the EXHAUSTIVE contract is what
-        # the all-pairs oracle states.
-        legs.append(_ccnet_mh_rows(spark, sf, docs, vocab, meta, handles_mh))
-    res = _union_all(legs).localCheckpoint(eager=True)
-    for h in handles + handles_mh + tt:  # release the composition's caches
-        h.unpersist()
-    return res
+    legs = []
+    with CacheScope() as scope:
+        surv, hint = _ccnet_survivors(scope, docs)
+        # ONE kept (doc_id, lang, tok) explode of the survivors feeds the
+        # shared-LM score AND both per-language legs (fit + score)
+        ex = scope.keep(lm_token_table(surv, by="lang_cc"))
+        # 'ccnet': the shared corpus-fit LM; 'ccnet_pl': the PAPER-FAITHFUL
+        # per-language mode — one model per identified language fit on the
+        # SAME survivors, each language bucketed against its own model
+        for model, per_language in (("ccnet", False), ("ccnet_pl", True)):
+            out = _ccnet_lm_buckets(
+                surv, hint, vocab, meta, per_language, _LM_V, exploded=ex
+            )
+            legs.append(out.select(
+                F.lit(model).alias("model"),
+                "doc_id",
+                "lm_logprob",
+                F.lit(None).cast("long").alias("lm_tokens"),
+                F.concat(F.col("lang_cc"), F.lit("|"), F.col("bucket")).alias(
+                    "bucket"
+                ),
+            ))
+        if include_mh:
+            # round 11 third part (verdict r10 #5): the PRODUCTION dedup
+            # shape — ccnet with near-dup minhash removal (curate_kw
+            # routes curate's dedup stage; threshold 0.8, the curate
+            # default).  The oracle leg is the exact all-pairs Jaccard
+            # graph + recursive components over the gate survivors (the
+            # dedup_minhash / dedup_resolution oracle pattern), so the
+            # banded plan's survivor set is pinned end-to-end inside the
+            # composition.  max_bucket_size is disabled like the simhash
+            # oracle row: the hot-bucket star guard is a production bound
+            # whose pair-set semantics are pytest-pinned; the EXHAUSTIVE
+            # contract is what the all-pairs oracle states.
+            legs.append(_ccnet_mh_rows(spark, sf, docs, vocab, meta))
+        return _union_all(legs).localCheckpoint(eager=True)
 
 
-def _ccnet_mh_rows(spark, sf, docs=None, vocab=None, meta=None, handles=None):
+def _ccnet_mh_rows(spark, sf, docs=None, vocab=None, meta=None):
     """The minhash-dedup CCNet composition alone (round 11, verdict r10
     #5) — see _ccnet_rows.  Callable standalone for the
     ``pipeline_ccnet_mh`` bench row."""
     from adampro_spark.pipeline.ccnet import ccnet_pipeline
     from adampro_spark.pipeline.lm import fit_unigram_lm
 
-    own = handles is None
     if docs is None:
         docs = _docs(spark, sf).select("doc_id", "text")
         vocab, meta = fit_unigram_lm(docs, vocab_size=_LM_V)
-    hs: list = [] if handles is None else handles
     out_mh = ccnet_pipeline(
-        docs, vocab, meta, handles=hs,
+        docs, vocab, meta,
         curate_kw={
             "dedup": "minhash", "dedup_threshold": 0.8,
             "max_bucket_size": 10**9,
         },
     )
-    res = out_mh.select(
+    return out_mh.select(
         F.lit("ccnet_mh").alias("model"),
         "doc_id",
         "lm_logprob",
@@ -3316,11 +3287,6 @@ def _ccnet_mh_rows(spark, sf, docs=None, vocab=None, meta=None, handles=None):
             "bucket"
         ),
     )
-    if own:
-        res = res.localCheckpoint(eager=True)
-        for h in hs:
-            h.unpersist()
-    return res
 
 
 def _ccnet_both_sql(v: int = _LM_V) -> str:

@@ -17,13 +17,14 @@ the composition passes ``min(n_output, max per-language n_pass)`` to
 WITHOUT replaying the curate lineage, against a bound that is tight
 PER GROUP (ADVICE r10: the previous global-count hint flipped every
 language to approximate quantiles once the corpus total crossed the
-ntile cap, even when no single language did).  Survivors are persisted
+ntile cap, even when no single language did).  Survivors are kept
 once: the shared-LM path reads them once more for scoring and the
 per-language path twice (the per-language FIT and the scoring pass),
 and every read hits the cache, so after the survivor materialization
 the upstream chain is never evaluated again — a composition test pins
 that, plus the one-gate-pass claim, with an accumulator in the input
-lineage (tests/test_lm.py).
+lineage (tests/test_lm.py).  Every cache is released before the
+pipeline returns its materialized output.
 
 Reference parity: the reference engine has no corpus pipeline — this is
 LLM-training-data scope (the brief's first-class additions), built on
@@ -39,6 +40,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from adampro_spark.caching import CacheScope
+
 
 def ccnet_pipeline(
     df: DataFrame,
@@ -52,16 +55,15 @@ def ccnet_pipeline(
     n_buckets: int = 3,
     curate_kw: Mapping[str, Any] | None = None,
     report_out: dict | None = None,
-    handles: list | None = None,
     per_language_lm: bool = False,
     vocab_size: int | None = None,
     langid_min_gap: float | None = None,
-    token_table_out: list | None = None,
 ) -> DataFrame:
     """Run the CCNet corpus build end-to-end; returns ``(pk, lang_col,
     lm_logprob, bucket)`` — every curate survivor with its trained-NB
     language and its per-language perplexity bucket (better scores =
-    earlier buckets; ``head``/``middle``/``tail`` for ``n_buckets=3``).
+    earlier buckets; ``head``/``middle``/``tail`` for ``n_buckets=3``),
+    materialized (eager localCheckpoint) with every stage cache released.
 
     * ``vocab``/``meta`` — a unigram LM from :func:`~adampro_spark
       .pipeline.lm.fit_unigram_lm`, shared across languages.
@@ -74,7 +76,8 @@ def ccnet_pipeline(
       vocabulary mostly measures WHICH language a document is in, not
       how fluent it is.  ``vocab_size`` overrides the per-language
       vocabulary cap (default :data:`~adampro_spark.pipeline.lm
-      .DEFAULT_VOCAB`).
+      .DEFAULT_VOCAB`).  The fit and the scoring pass share one kept
+      survivor token table.
     * ``langid_model``/``langid_meta`` — a trained NB model from
       :func:`~adampro_spark.pipeline.langid.fit_langid`; ``None`` fits
       the bundled seed languages.  Documents identified ``und``
@@ -89,12 +92,6 @@ def ccnet_pipeline(
       Round 11 (verdict r10 #3): it comes out of curate's ONE gate
       aggregate (``report_by=lang_col``), not a second gate scan, and
       is driver-built — collecting it runs no job over the corpus.
-    * ``handles`` — receives the persisted DataFrames (langid-tagged
-      corpus + survivors) so materializing callers can release the
-      caches (the ``banded_candidates`` convention).  Without
-      ``handles`` nothing is persisted (ADVICE r10: no session-lifetime
-      cache leak) and curate's gate pass + survivor lineage each
-      re-evaluate the langid UDF — pass ``handles`` for production runs.
 
     The bucket split runs ``method="auto"`` with ``max_group_rows_hint
     = min(n_output, max per-language n_pass)`` — exact NTILE terciles
@@ -102,9 +99,45 @@ def ccnet_pipeline(
     per-group, ADVICE r10), the approximate quantile route past 2M rows
     per group, and in both cases ZERO extra jobs to decide.
     """
+    if not per_language_lm and (vocab is None or meta is None):
+        raise ValueError(
+            "ccnet_pipeline needs (vocab, meta) from fit_unigram_lm, or "
+            "per_language_lm=True to fit per-language models itself"
+        )
+    with CacheScope() as scope:
+        survivors, hint = _ccnet_survivors(
+            scope, df, langid_model, langid_meta, text_col, pk, lang_col,
+            curate_kw, report_out, langid_min_gap,
+        )
+        exploded = None
+        if per_language_lm:
+            from adampro_spark.pipeline.lm import lm_token_table
+
+            exploded = scope.keep(
+                lm_token_table(survivors, by=lang_col, text_col=text_col, pk=pk)
+            )
+        return _ccnet_lm_buckets(
+            survivors, hint, vocab, meta, per_language_lm, vocab_size,
+            text_col, pk, lang_col, n_buckets, exploded,
+        ).localCheckpoint(eager=True)
+
+
+def _ccnet_survivors(
+    scope: CacheScope,
+    df: DataFrame,
+    langid_model: dict[str, dict[str, float]] | None = None,
+    langid_meta: dict[str, Any] | None = None,
+    text_col: str = "text",
+    pk: str = "doc_id",
+    lang_col: str = "lang_cc",
+    curate_kw: Mapping[str, Any] | None = None,
+    report_out: dict | None = None,
+    langid_min_gap: float | None = None,
+) -> tuple[DataFrame, int]:
+    """Trained langid → curate: the survivors (kept in ``scope``, with
+    ``lang_col``) and the per-language row hint for the bucket split."""
     from adampro_spark.pipeline.curate import curate
     from adampro_spark.pipeline.langid import fit_langid, trained_langid_col
-    from adampro_spark.pipeline.lm import lm_bucket
 
     if langid_model is None or langid_meta is None:
         langid_model, langid_meta = fit_langid()
@@ -127,22 +160,18 @@ def ccnet_pipeline(
     # materialization at sf0.1; plan showed two ArrowEvalPython nodes).
     from adampro_spark.pipeline.text import nd_pin
 
-    tagged = df.withColumn(
-        lang_col,
-        nd_pin(
-            trained_langid_col(
-                langid_model, langid_meta, text_col, min_gap=langid_min_gap
-            )
-        ),
-    ).filter(F.col(lang_col) != "und")
-    if handles is not None:
-        # curate consumes the tagged corpus twice (gate aggregate +
-        # survivor lineage) — persist so the full-corpus langid UDF runs
-        # once, but ONLY when the caller can release the cache via
-        # handles (ADVICE r10: an unreleasable persist leaks for the
-        # session)
-        tagged = tagged.persist()
-        handles.append(tagged)
+    # curate consumes the tagged corpus twice (gate aggregate + survivor
+    # lineage) — kept so the full-corpus langid UDF runs once
+    tagged = scope.keep(
+        df.withColumn(
+            lang_col,
+            nd_pin(
+                trained_langid_col(
+                    langid_model, langid_meta, text_col, min_gap=langid_min_gap
+                )
+            ),
+        ).filter(F.col(lang_col) != "und")
+    )
 
     kw: dict[str, Any] = dict(
         langs=None, min_tokens=20, min_quality=0.3, dedup="exact"
@@ -159,26 +188,30 @@ def ccnet_pipeline(
     if report_out is not None:
         report_out.update(report)
         report_out["by_lang"] = by_lang
+    # the LM stage reads survivors 1-2× (fit + score)
+    return scope.keep(survivors), hint
 
-    if handles is not None:
-        # the LM stage reads survivors 1-2× (fit + score) — same
-        # persist-only-with-a-release-path rule as the tagged corpus
-        survivors = survivors.persist()
-        handles.append(survivors)
-    exploded = None
-    if token_table_out is not None:
-        # shared token explode (round 16, verdict r15 #4): the LM legs
-        # below — and any per-language fit/score the CALLER runs on the
-        # same survivors — each tokenize the survivor corpus; one
-        # persisted (pk, lang, tok) table feeds them all.  Appended to
-        # token_table_out so the caller owns the release (the handles
-        # convention) — without the list nothing is persisted.
-        from adampro_spark.pipeline.lm import lm_token_table
 
-        exploded = lm_token_table(
-            survivors, by=lang_col, text_col=text_col, pk=pk
-        ).persist()
-        token_table_out.append(exploded)
+def _ccnet_lm_buckets(
+    survivors: DataFrame,
+    hint: int,
+    vocab: DataFrame | None,
+    meta: dict[str, Any] | None,
+    per_language_lm: bool,
+    vocab_size: int | None,
+    text_col: str = "text",
+    pk: str = "doc_id",
+    lang_col: str = "lang_cc",
+    n_buckets: int = 3,
+    exploded: DataFrame | None = None,
+) -> DataFrame:
+    """The LM stage: per-language terciles of the survivors against the
+    shared ``(vocab, meta)`` model or, with ``per_language_lm``, against
+    one model per language fit on the survivors.  ``exploded`` is an
+    optional kept :func:`~adampro_spark.pipeline.lm.lm_token_table` of
+    the survivors that every LM leg reads instead of re-tokenizing."""
+    from adampro_spark.pipeline.lm import lm_bucket
+
     if per_language_lm:
         from adampro_spark.pipeline.lm import (
             DEFAULT_VOCAB, fit_unigram_lm_by, lm_bucket_by,
@@ -195,11 +228,6 @@ def ccnet_pipeline(
             survivors, vocab_by, metas, by=lang_col,
             text_col=text_col, pk=pk, n_buckets=n_buckets,
             method="auto", max_group_rows_hint=hint, exploded=exploded,
-        )
-    if vocab is None or meta is None:
-        raise ValueError(
-            "ccnet_pipeline needs (vocab, meta) from fit_unigram_lm, or "
-            "per_language_lm=True to fit per-language models itself"
         )
     return lm_bucket(
         survivors,

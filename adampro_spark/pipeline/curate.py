@@ -758,24 +758,16 @@ def curate(
             stage_timings["resolution_sec"] = round(time.perf_counter() - t2, 3)
     else:
         t1 = time.perf_counter()
+        # both generators return the pair set checkpointed, their
+        # internal caches already released
         if dedup == "minhash":
-            # materialize=True: the pair set checkpoints eagerly and the
-            # shingle/signature cache is RELEASED before resolution —
-            # repeated curate() calls in one session no longer accumulate
-            # a persisted copy of the corpus per call (ADVICE r7)
             pairs = minhash_dup_pairs(
                 kept, text_col=text_col, pk=pk,
                 threshold=0.8 if dedup_threshold is None else dedup_threshold,
-                materialize=True,
                 **dedup_kw,
             )
         elif dedup == "simhash":
-            # materialize=True: eager pair checkpoint + the internal
-            # fingerprint/tagged-band caches released, like the minhash
-            # branch (ADVICE r7/r15)
-            pairs = simhash_pairs(
-                kept, text_col=text_col, pk=pk, materialize=True, **dedup_kw
-            )
+            pairs = simhash_pairs(kept, text_col=text_col, pk=pk, **dedup_kw)
         else:
             raise ValueError(f"unknown curate dedup {dedup!r}")
         if stage_timings is not None:

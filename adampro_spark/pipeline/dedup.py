@@ -31,6 +31,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adampro_spark.caching import CacheScope
 from adampro_spark.pipeline.text import (
     HASH_P,
     char_codes,
@@ -183,12 +184,12 @@ def exact_dedup(
 # ---------------------------------------------------------------------------
 
 
-def banded_candidates(
+def _banded_candidates(
+    scope: CacheScope,
     bandtab: DataFrame,
     keys: list[str],
     pk_col: str = "_pk",
     max_bucket_size: int = 1024,
-    handles: list | None = None,
 ) -> DataFrame:
     """Candidate pairs ``(id_a, id_b)`` (id_a < id_b) from an LSH band
     table, with a HOT-BUCKET guard — the classic LSH skew-killer at scale:
@@ -207,39 +208,23 @@ def banded_candidates(
       just an optimization.
 
     The hot/cold split is a map-side-combinable per-bucket aggregate
-    joined back onto the band table (verdict r9 #2): ``groupBy(band
-    keys).agg(count, min pk)`` partial-combines on the map side — a
-    degenerate bucket (e.g. a corpus that is 50% one identical document)
+    joined back onto the band table: ``groupBy(band keys).agg(count,
+    min pk)`` partial-combines on the map side — a degenerate bucket
     contributes ONE (keys, count, rep) row per map task before the
-    shuffle — and the join-back is AQE-skew-splittable (the hot probe
-    partition splits across tasks because the build side holds a single
-    row per bucket).  The previous ``Window.partitionBy(band keys)``
-    shape put all ~n/2 rows of a degenerate bucket through ONE
-    WindowExec task, which AQE cannot split; a planted-degenerate test
-    (tests/test_skew.py) pins the new shape.  No driver round-trip, no
-    literal hot-key list (an earlier version collected over-cap keys to
-    the driver — fine when degenerate buckets are rare, but the
-    aggregate form stays correct even if a corpus has MILLIONS of hot
-    buckets).  The tagged table is persisted: the cold self-join reads
-    it twice and the star branch once, and without the barrier each
-    consumer would re-run the upstream band-hash UDF (at 100 TB the band
-    table is a persisted artifact of the corpus build anyway, like the
-    signature table).
+    shuffle — and the join-back is AQE-skew-splittable because the build
+    side holds a single row per bucket.  A ``Window.partitionBy(band
+    keys)`` would put all rows of a degenerate bucket through ONE task
+    that AQE cannot split (tests/test_skew.py pins the shape).  The
+    tagged table is kept in the caller's ``scope``: the cold self-join
+    reads it twice and the star branch once, and without the barrier
+    each consumer would re-run the upstream band-hash UDF.
     """
     stats = bandtab.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("_bn"), F.min(pk_col).alias("_rep")
     )
-    tagged = (
-        bandtab.join(stats, on=list(keys))
-        .select(*keys, pk_col, "_bn", "_rep")
-        .persist()
+    tagged = scope.keep(
+        bandtab.join(stats, on=list(keys)).select(*keys, pk_col, "_bn", "_rep")
     )
-    if handles is not None:
-        # release path for materializing callers (ADVICE r7): the tagged
-        # band table is the second persisted intermediate behind every
-        # banded pair generator — callers that checkpoint their output
-        # eagerly unpersist it alongside the signature table
-        handles.append(tagged)
     cold = tagged.filter(F.col("_bn") <= max_bucket_size).select(*keys, pk_col)
     pairs = (
         cold.alias("a")
@@ -377,17 +362,10 @@ def minhash_dup_pairs(
     rows: int = 4,
     seed: int = 42,
     max_bucket_size: int = 1024,
-    materialize: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs ``(id_a, id_b, jaccard)`` with exact shingle-set
-    Jaccard ≥ threshold, id_a < id_b.
-
-    ``materialize=True`` eagerly localCheckpoints the (small) pair set
-    and RELEASES the persisted shingle/signature cache before returning —
-    the dedup_against recipe (ADVICE r7): callers that invoke this
-    repeatedly in one session (curate over successive batches) otherwise
-    accumulate a cached copy of the corpus per call until eviction
-    pressure.  The default stays lazy (plan inspection, composition).
+    Jaccard ≥ threshold, id_a < id_b — returned materialized (eager
+    localCheckpoint), with the shingle/signature caches released.
 
     Plan shape (the only scale-safe one):
       1. one map stage: pk → distinct shingle hashes + signature + bands;
@@ -396,48 +374,60 @@ def minhash_dup_pairs(
          degenerate buckets (identical boilerplate, empty docs — every
          empty text gets the sentinel shingle set ``[0]`` and thus
          identical bands) are capped by the hot-bucket guard
-         (``banded_candidates``: star pairs above ``max_bucket_size``);
+         (``_banded_candidates``: star pairs above ``max_bucket_size``);
       3. semi-join the shingle sets back by pk (twice) and verify exact
          Jaccard = |∩| / |∪|.
 
     P(miss) at j = 0.7 with 32×4 is (1-0.7⁴)³² ≈ 1.5e-4 and falls to
     ~1e-6 at j = 0.8; verified exhaustively in the oracle suite at sf0.01.
 
-    ``bands="auto"`` (round 8) resolves the banding from the threshold
-    via :func:`lsh_params` over a ``bands·rows`` permutation budget of
-    128 — the S-curve fit, instead of hand-picked (32, 4).
+    ``bands="auto"`` resolves the banding from the threshold via
+    :func:`lsh_params` over a ``bands·rows`` permutation budget of 128 —
+    the S-curve fit, instead of hand-picked (32, 4).
     """
+    with CacheScope() as scope:
+        return _minhash_pairs(
+            scope, df, text_col, pk, threshold, shingle_n, bands, rows, seed,
+            max_bucket_size,
+        ).localCheckpoint(eager=True)
+
+
+def _minhash_pairs(
+    scope: CacheScope,
+    df: DataFrame,
+    text_col: str,
+    pk: str,
+    threshold: float,
+    shingle_n: int,
+    bands: "int | str",
+    rows: int,
+    seed: int,
+    max_bucket_size: int,
+) -> DataFrame:
+    """The lazy pair query behind :func:`minhash_dup_pairs`; its caches
+    live in ``scope``."""
     if bands == "auto":
         bands, rows = lsh_params(float(threshold), num_perm=128)
-    base = _minhash_base(df, text_col, pk, shingle_n, bands, rows, seed)
-
-    handles: list = [base]
+    base = scope.keep(_minhash_base(df, text_col, pk, shingle_n, bands, rows, seed))
     bandtab = base.select(
         "_pk", F.posexplode(F.col("_bands")).alias("_band_idx", "_band_hash")
     )
-    cand = banded_candidates(
-        bandtab, ["_band_idx", "_band_hash"], max_bucket_size=max_bucket_size,
-        handles=handles if materialize else None,
+    cand = _banded_candidates(
+        scope, bandtab, ["_band_idx", "_band_hash"],
+        max_bucket_size=max_bucket_size,
     )
 
     sets = base.select("_pk", "_sh")
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
     jac = inter / union
-    pairs = (
+    return (
         cand.join(sets.select(F.col("_pk").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a")
         .join(sets.select(F.col("_pk").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
         .withColumn("jaccard", F.round(jac, 4))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if materialize:
-        try:
-            pairs = pairs.localCheckpoint(eager=True)
-        finally:
-            for h in handles:
-                h.unpersist()
-    return pairs
 
 
 def _minhash_base(
@@ -449,8 +439,9 @@ def _minhash_base(
     rows: int,
     seed: int,
 ) -> DataFrame:
-    """The persisted ``(_pk, _sh, _bands)`` shingle/signature table behind
-    every MinHash consumer (self-join pairs, asymmetric dedup_against).
+    """The ``(_pk, _sh, _bands)`` shingle/signature table behind every
+    MinHash consumer (self-join pairs, asymmetric dedup_against); each
+    consumer keeps it in its scope.
     """
     # Shingling + signature + banding as ONE Arrow-batched pandas UDF pass
     # over the text (one python worker round-trip, one persist barrier):
@@ -528,16 +519,15 @@ def _minhash_base(
         ),
     )
 
-    # PERSIST BARRIER after the one map pass: the shingle sets feed the
-    # verify join and the band hashes feed candidate generation — at
-    # 100 TB the shingle/signature table is a persisted artifact anyway
-    # (build once, reuse for every dedup run); in-session persist is the
-    # operator-local equivalent.
+    # callers keep this as a PERSIST BARRIER after the one map pass: the
+    # shingle sets feed the verify join and the band hashes feed
+    # candidate generation — at 100 TB the shingle/signature table is a
+    # persisted artifact anyway (build once, reuse for every dedup run);
+    # the scoped persist is the operator-local equivalent.
     return (
         _spread(df)
         .select(F.col(pk).alias("_pk"), sb_udf(F.col(text_col)).alias("_sb"))
         .select("_pk", F.col("_sb.sh").alias("_sh"), F.col("_sb.bands").alias("_bands"))
-        .persist()
     )
 
 
@@ -545,14 +535,14 @@ def _minhash_base(
 # duplicate-group resolution (pairs -> connected components -> survivors)
 # ---------------------------------------------------------------------------
 
-# "auto" propagates this many rounds before escaping to star alternation:
+# dup_groups propagates this many rounds before escaping to star alternation:
 # covers every measured banded near-dup graph (dense clusters, diameter
 # 2-3 → 2-4 rounds) at propagation's cheaper per-round cost
 ESCAPE_ROUNDS = 4
 
 
 #: analyzed-plan line budget under which a pair table counts as "already
-#: materialized flat" for dup_groups' edge-cache gate (round 16): a
+#: materialized flat" for dup_groups' edge-cache gate: a
 #: localCheckpoint is 1 line, a cached projection a handful; every pair
 #: GENERATOR lineage (bands, windows, UDFs, joins) is tens of lines.
 FLAT_PAIR_PLAN_LINES = 8
@@ -564,7 +554,6 @@ def dup_groups(
     id_b: str = "id_b",
     max_iterations: int = 50,
     reliable: bool = False,
-    algorithm: str = "auto",
     _stats: dict | None = None,
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into duplicate GROUPS: connected
@@ -573,45 +562,29 @@ def dup_groups(
     in a pair; ``id == survivor`` marks the row to keep, everything else
     drops — the action step after any of the pair generators above.
 
-    ``algorithm`` (round 7):
-      * ``"propagate"`` — min-label propagation: every node starts
-        labeled with its own id; each round joins labels across edges
-        both ways and keeps the min; stops when no label changed.
-        Rounds = graph diameter; CHEAPEST per round, the right tool for
-        the dense low-diameter clusters near-dup banding produces (2-4
-        rounds in practice) — but on an adversarial high-diameter chain
-        it needs diameter rounds; it used to hit ``max_iterations`` and
-        return silently WRONG labels (measured: a 64-chain at the old
-        default cap) and now RAISES at the cap instead.
-      * ``"star"`` — large-star/small-star alternation (Kiveris et al.,
-        "Connected Components in MapReduce and Beyond", SoCC 2014): each
-        round REWIRES edges toward the component minimum instead of
-        propagating labels one hop, so components collapse in O(log² n)
-        rounds regardless of diameter (measured on a 64-chain: 7 rounds
-        vs propagation's 63).  ~2 extra jobs per round, so it loses to
-        propagation on tiny-diameter graphs.
-      * ``"auto"`` (default) — propagate up to ``ESCAPE_ROUNDS`` rounds
-        (covers every banded near-dup graph measured so far at the
-        cheaper per-round cost), then ESCAPE to star alternation if not
-        yet converged: the common case pays nothing, the chain-shaped
-        worst case converges in logarithmic rounds instead of silently
-        mislabeling at the cap.
+    Min-label propagation runs first: every node starts labeled with its
+    own id; each round joins labels across edges both ways and keeps the
+    min, stopping when no label changed.  Rounds = graph diameter, the
+    cheapest per round and the right tool for the dense low-diameter
+    clusters near-dup banding produces (2-4 rounds in practice).  A graph
+    still unconverged after ``ESCAPE_ROUNDS`` rounds (an adversarial
+    high-diameter chain) switches to large-star/small-star alternation
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC 2014): each round REWIRES edges toward the component minimum, so
+    components collapse in O(log² n) rounds regardless of diameter
+    (measured on a 64-chain: 7 rounds vs propagation's 63), at ~2 extra
+    jobs per round.
 
-    All modes run per-round eager checkpoints so the plan stays O(1) and
-    never collect the graph.  ``reliable=True`` swaps the per-round
+    Every round is an eager checkpoint, so the plan stays O(1) and the
+    graph is never collected.  ``reliable=True`` swaps the per-round
     ``localCheckpoint`` for a reliable ``checkpoint`` (requires
     ``setCheckpointDir``): rounds survive executor loss — the right
     setting for long-running cluster jobs.  ``_stats`` (tests/bench)
-    receives ``{"rounds": …, "algorithm": …}``.
+    receives ``{"rounds": …, "algorithm": "propagate" | "auto->star"}``.
     """
-    if algorithm not in ("auto", "star", "propagate"):
-        raise ValueError(f"unknown components algorithm {algorithm!r}")
-    # symmetrize with ONE read of `pairs` (round 15): the old two-branch
-    # union re-executed the whole pair-generator lineage twice per edge
-    # materialization (the generators' internal persists cap the damage
-    # locally, but at corpus scale the candidate-verify join is itself a
-    # full pass over the pair table) — exploding both orientations from
-    # a single scan halves that work with an identical edge set
+    # symmetrize with ONE read of `pairs`: exploding both orientations
+    # from a single scan yields the same edge set as a two-branch union
+    # at half the pair-table reads
     edges = (
         pairs.select(
             F.explode(
@@ -628,28 +601,16 @@ def dup_groups(
         .select("_e.src", "_e.dst")
         .distinct()
     )
-    # CHECKPOINT (not persist) the slim symmetric edge list (round 15):
-    # a persist caches the DATA but every round's action still re-ANALYZES
-    # and re-OPTIMIZES the full pair-generator lineage (band UDFs, windows,
-    # joins — measured ~0.5-1.5 s of driver planning per eager round on
-    # the curate compositions); the checkpoint truncates the logical plan
-    # to the materialized blocks, so the deep lineage is planned exactly
-    # once and every propagation/star round plans against a flat source.
-    # Storage profile is unchanged — the same slim (long, long) rows.
     # Each round's plan references `labels` TWICE (the neighbor join and
     # the own-label join), so without truncation the LOGICAL plan doubles
     # per round — 2^rounds subtrees; a 14-round chain OOMed the driver
     # just stringifying the plan, and an uncached lineage also recomputes
-    # prior rounds (measured: quadratic work, 11 s vs ~8 s at sf0.1).
-    # localCheckpoint(eager) per round does both jobs at once: it
-    # MATERIALIZES the round (one job, like a persist+count) and cuts the
-    # lineage to the checkpointed blocks, keeping the plan O(1) and the
-    # work O(rounds).  Old checkpoint blocks are GC'd with their DataFrame
-    # references.  (Unreliable-checkpoint caveat: executor loss recomputes
-    # nothing here — it fails the job; a cluster deployment that needs
-    # fault tolerance passes ``reliable=True`` after
-    # ``spark.sparkContext.setCheckpointDir(...)`` — each round then
-    # writes to the reliable store instead of executor block managers.)
+    # prior rounds.  localCheckpoint(eager) per round MATERIALIZES the
+    # round (one job, like a persist+count) and cuts the lineage to the
+    # checkpointed blocks, keeping the plan O(1) and the work O(rounds).
+    # (Unreliable-checkpoint caveat: executor loss fails the job; a
+    # cluster deployment that needs fault tolerance passes
+    # ``reliable=True`` after ``spark.sparkContext.setCheckpointDir``.)
     if reliable:
         sc = pairs.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
@@ -661,112 +622,69 @@ def dup_groups(
     else:
         ckpt = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
 
-    # round 16 (verdict r15 #1): the eager edge checkpoint above exists
-    # to stop per-round re-ANALYSIS of a DEEP pair-generator lineage.
-    # When the caller's pair table is already materialized flat (the
-    # semantic/embedding generators return an eager localCheckpoint, so
-    # its analyzed plan is a bare LogicalRDD), that lineage does not
-    # exist and the eager checkpoint is a net NEW job per call — the
-    # r15 driver bench read dedup_semantic +25% on exactly this shape.
-    # Persist lazily instead: the fused first-round aggregate
-    # materializes the cache inside a job it runs anyway, and each
-    # round re-plans only explode+distinct over the flat source (a
-    # handful of nodes).  Deep lineages keep the checkpoint.
-    edges_cache = None
+    # The edge list is CHECKPOINTED when `pairs` carries a deep lineage:
+    # a persist caches the data but every round would still re-analyze
+    # the whole pair-generator plan (band UDFs, windows, joins).  A pair
+    # table that is already flat (every generator returns an eager
+    # checkpoint, so its analyzed plan is a bare LogicalRDD) has no such
+    # lineage, and a checkpoint would be a net new job per call — the
+    # edge list is kept in the block instead, materialized by the fused
+    # first round's aggregate inside a job it runs anyway.
     try:
         pair_depth = len(
             pairs._jdf.queryExecution().analyzed().treeString().splitlines()
         )
     except Exception:
         pair_depth = 1 << 30
-    if not reliable and pair_depth <= FLAT_PAIR_PLAN_LINES:
-        edges = edges.persist()
-        edges_cache = edges
-    else:
-        edges = ckpt(edges)
-    # FUSED first round (round 15): min-label propagation's round 1 from
-    # self-labels is exactly min(own id, min neighbor id), which is one
-    # map-side-combinable aggregate over the symmetric edge list — no
-    # label join, no separate node-id distinct, and one fewer eager
-    # checkpoint+changed-count round trip.  Banded near-dup graphs are
-    # star-shaped (diameter ≤ 2), so this fusion removes a third to a
-    # half of the propagation jobs on the common shape.
-    labels = edges.groupBy(F.col("src").alias("id")).agg(
-        F.least(F.col("src"), F.min("dst")).alias("survivor")
-    )
-
-    def _to_star():
-        # the star path's RESULT lazily re-reads the symmetric edge list
-        # (its `nodes` leg), so a persisted-but-released cache would
-        # recompute in the caller's action — pin the edges flat first
-        # (one cheap job off the live cache), then release the cache
-        nonlocal edges, edges_cache
-        if edges_cache is not None:
+    with CacheScope() as scope:
+        if not reliable and pair_depth <= FLAT_PAIR_PLAN_LINES:
+            edges = scope.keep(edges)
+        else:
             edges = ckpt(edges)
-            edges_cache.unpersist()
-            edges_cache = None
-        return _star_components(edges, ckpt, max_iterations, _stats)
-
-    if algorithm == "star":
-        return _to_star()
-
-    budget = min(ESCAPE_ROUNDS, max_iterations) if algorithm == "auto" else max_iterations
-    converged = False
-    labels = ckpt(labels)
-    rounds = 1  # the fused init IS propagation round 1
-    for _ in range(budget):
-        rounds += 1
-        # candidate labels: own label + min neighbor label
-        neighbor = (
-            edges.join(labels.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("survivor").alias("n_survivor"))
-        )
-        updated = (
-            labels.join(neighbor, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("survivor"), F.coalesce("n_survivor", "survivor")
-                ).alias("survivor"),
-                (F.coalesce("n_survivor", "survivor") < F.col("survivor")).alias(
-                    "_chg"
-                ),
+        # FUSED first round: propagation's round 1 from self-labels is
+        # exactly min(own id, min neighbor id), one map-side-combinable
+        # aggregate over the symmetric edge list — no label join, no
+        # separate node-id distinct, one fewer checkpoint round trip.
+        labels = ckpt(
+            edges.groupBy(F.col("src").alias("id")).agg(
+                F.least(F.col("src"), F.min("dst")).alias("survivor")
             )
         )
-        updated = ckpt(updated)
-        changed = updated.filter(F.col("_chg")).limit(1).count()
-        labels = updated.drop("_chg")
-        if changed == 0:
-            converged = True
-            break
-    if algorithm == "auto" and not converged:
-        # high-diameter graph: propagation would need diameter rounds and
-        # silently mislabel at the cap — hand off to star alternation,
-        # which finishes in O(log²) rounds regardless of shape
-        # (_to_star pins + releases a persisted edge cache first)
-        out = _to_star()
+        rounds = 1  # the fused init IS propagation round 1
+        for _ in range(min(ESCAPE_ROUNDS, max_iterations)):
+            rounds += 1
+            # candidate labels: own label + min neighbor label
+            neighbor = (
+                edges.join(labels.withColumnRenamed("id", "dst"), "dst")
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.min("survivor").alias("n_survivor"))
+            )
+            updated = ckpt(
+                labels.join(neighbor, "id", "left").select(
+                    "id",
+                    F.least(
+                        F.col("survivor"), F.coalesce("n_survivor", "survivor")
+                    ).alias("survivor"),
+                    (
+                        F.coalesce("n_survivor", "survivor") < F.col("survivor")
+                    ).alias("_chg"),
+                )
+            )
+            changed = updated.filter(F.col("_chg")).limit(1).count()
+            labels = updated.drop("_chg")
+            if changed == 0:
+                if _stats is not None:
+                    _stats.update({"rounds": rounds, "algorithm": "propagate"})
+                return labels
+        # high-diameter graph: propagation would need diameter rounds —
+        # star alternation finishes in O(log²) rounds regardless of shape.
+        # Its result re-reads the edge list, so it is checkpointed before
+        # the block releases the edges.
+        out = ckpt(_star_components(edges, ckpt, max_iterations, _stats))
         if _stats is not None:
-            _stats["rounds"] = _stats.get("rounds", 0) + rounds
+            _stats["rounds"] += rounds
             _stats["algorithm"] = "auto->star"
         return out
-    if edges_cache is not None:
-        # the converged labels are a flat checkpoint (and the raise path
-        # returns nothing) — the edge cache has no live consumer left
-        edges_cache.unpersist()
-        edges_cache = None
-    if not converged:
-        # explicit propagate hit the cap: labels are WRONG for any
-        # component wider than the round budget — refuse loudly (the old
-        # behavior returned them silently; review r7)
-        raise RuntimeError(
-            f"dup_groups(algorithm='propagate') did not converge in "
-            f"{max_iterations} rounds — the graph's diameter exceeds the "
-            f"budget; use algorithm='auto'/'star' or raise max_iterations"
-        )
-    if _stats is not None:
-        _stats.update({"rounds": rounds, "algorithm": "propagate"})
-    return labels
 
 
 def _star_components(
@@ -1047,7 +965,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     nbits: int = SIMHASH_BITS,
     max_bucket_size: int = 1024,
-    materialize: bool = False,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: bucket on Manku-style multi-block keys
     (:func:`_simhash_block_keys` — every pair with hamming ≤
@@ -1055,8 +972,9 @@ def simhash_pairs(
     equi-join finds ALL of them; no all-pairs), verify exact
     popcount(xor) ≤ max_hamming.  Degenerate buckets (rare with
     half-fingerprint keys) are capped by the hot-bucket guard
-    (``banded_candidates``); the fingerprints ride the candidate join as
-    pk-keyed lookups, not join payload.
+    (``_banded_candidates``); the fingerprints ride the candidate join as
+    pk-keyed lookups, not join payload.  Returned materialized, like
+    :func:`fingerprint_pairs`.
     """
     return fingerprint_pairs(
         df.withColumn("_ap_fp", simhash_expr(text_col, nbits)),
@@ -1065,7 +983,6 @@ def simhash_pairs(
         max_hamming=max_hamming,
         nbits=nbits,
         max_bucket_size=max_bucket_size,
-        materialize=materialize,
     )
 
 
@@ -1102,41 +1019,50 @@ def fingerprint_pairs(
     nbits: int = SIMHASH_BITS,
     max_bucket_size: int = 1024,
     group_cols: "Sequence[str]" = (),
-    materialize: bool = False,
 ) -> DataFrame:
     """Near-dup pairs ``(id_a, id_b, hamming)`` over ANY precomputed
     NONNEGATIVE integer fingerprint column — the Manku multi-block
-    Hamming core behind :func:`simhash_pairs`, factored out (round 13)
-    so other fingerprint families plug in: image dHash
+    Hamming core behind :func:`simhash_pairs`, shared by image dHash
     (:func:`~adampro_spark.pipeline.multimodal.image_dhash`, 63 bits),
     audio/video signatures, or externally-computed hashes.  Candidates
     via the exhaustive-by-pigeonhole block keys, exact popcount(xor)
     verification, hot-bucket star guard — fingerprints never ride the
     exploded key rows.
 
-    NULL fingerprints (the failure-tolerant media kernels emit them for
-    undecodable blobs, round 14) are dropped up front: such rows can
-    never pair, so they pass through any downstream ``deduplicate`` as
-    non-candidates.  NEGATIVE fingerprints raise loudly via the house
-    assert-folded guard (ADVICE r13): the Manku block keys use
-    arithmetic shifts, so a bit-63-set hash would silently sign-extend
-    into wrong keys — i.e. MISSED pairs, not an error — use 63-bit
-    hash conventions (``nbits`` ≤ 63).
+    NULL fingerprints (undecodable media blobs) are dropped up front:
+    such rows never pair, so they pass through any downstream
+    ``deduplicate``.  NEGATIVE fingerprints raise: the Manku block keys
+    use arithmetic shifts, so a bit-63-set hash would sign-extend into
+    wrong keys — MISSED pairs, not an error — use 63-bit hash
+    conventions (``nbits`` ≤ 63).
 
-    ``group_cols`` (round 15): extra partitioning columns prepended to
-    the band-bucket key so candidates NEVER cross groups — one call
-    over a multi-family fingerprint table (e.g. curate_media's
-    image/audio/video modality tag) replaces a per-family call series:
-    buckets are keyed by (group, block-index, block-value), so the pair
-    set is exactly the union of the per-group pair sets (the hot-bucket
-    cap applies per group-bucket, same as per-family calls) while the
-    explode/shuffle/join machinery runs ONCE.
+    ``group_cols``: extra partitioning columns prepended to the bucket
+    key so candidates NEVER cross groups — one call over a multi-family
+    fingerprint table (e.g. curate_media's modality tag) yields exactly
+    the union of the per-group pair sets (the hot-bucket cap applies
+    per group-bucket) while the explode/shuffle/join runs ONCE.
 
-    ``materialize=True`` eagerly localCheckpoints the (small) pair set
-    and RELEASES the persisted fingerprint and tagged-band caches before
-    returning — the :func:`minhash_dup_pairs` recipe (ADVICE r7/r15):
-    repeated calls in one session otherwise accumulate persisted copies
-    of the fingerprint table per call until eviction pressure."""
+    The pair set is returned materialized (eager localCheckpoint), with
+    the fingerprint and tagged-band caches released."""
+    with CacheScope() as scope:
+        return _fingerprint_pairs(
+            scope, df, fp_col, pk, max_hamming, nbits, max_bucket_size,
+            group_cols,
+        ).localCheckpoint(eager=True)
+
+
+def _fingerprint_pairs(
+    scope: CacheScope,
+    df: DataFrame,
+    fp_col: str,
+    pk: str,
+    max_hamming: int,
+    nbits: int,
+    max_bucket_size: int,
+    group_cols: "Sequence[str]",
+) -> DataFrame:
+    """The lazy pair query behind :func:`fingerprint_pairs`; its caches
+    live in ``scope``."""
     key_arr, _, _ = _simhash_block_keys(nbits, max_hamming)
     gcols = list(group_cols)
     # no _spread here (round 15): the fingerprints are PRECOMPUTED, so the
@@ -1154,31 +1080,22 @@ def fingerprint_pairs(
         )
     )
     # barrier: stop CollapseProject inlining the fingerprint expression
-    # into every block-key expression (see minhash_dup_pairs)
-    sim = sim.persist()
-    handles: list = [sim]
+    # into every block-key expression (see minhash_signature)
+    sim = scope.keep(sim)
     chunked = sim.select(
         "_pk", *gcols, F.posexplode(key_arr).alias("_ci", "_cv")
     )
-    cand = banded_candidates(
-        chunked, gcols + ["_ci", "_cv"], max_bucket_size=max_bucket_size,
-        handles=handles if materialize else None,
+    cand = _banded_candidates(
+        scope, chunked, gcols + ["_ci", "_cv"], max_bucket_size=max_bucket_size
     )
     ham = F.bit_count(F.col("s_a").bitwiseXOR(F.col("s_b")))
-    pairs = (
+    return (
         cand.join(sim.select(F.col("_pk").alias("id_a"), F.col("_s").alias("s_a")), "id_a")
         .join(sim.select(F.col("_pk").alias("id_b"), F.col("_s").alias("s_b")), "id_b")
         .withColumn("hamming", ham.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    if materialize:
-        try:
-            pairs = pairs.localCheckpoint(eager=True)
-        finally:
-            for h in handles:
-                h.unpersist()
-    return pairs
 
 
 # ---------------------------------------------------------------------------
@@ -1202,17 +1119,10 @@ def embedding_dup_pairs(
     seed: int = 42,
     dim: int | None = None,
     max_bucket_size: int = 1024,
-    materialize: bool = False,
 ) -> DataFrame:
     """Embedding near-dup pairs ``(id_a, id_b, cos_sim)`` with exact cosine
-    similarity ≥ threshold, id_a < id_b.
-
-    ``materialize=True`` eagerly localCheckpoints the (small) pair set
-    and RELEASES the persisted vector/band and tagged-band caches before
-    returning — the :func:`minhash_dup_pairs` recipe (ADVICE r7/r15):
-    repeated calls in one session otherwise accumulate a persisted
-    corpus-scale copy of the vectors per call until eviction pressure.
-    The default stays lazy (plan inspection, composition).
+    similarity ≥ threshold, id_a < id_b — returned materialized (eager
+    localCheckpoint), with the vector/band caches released.
 
     Candidates via sign-LSH (random-hyperplane) banding: bit = sign(v·h),
     band hash folds r bits, equi-join on (band_idx, band_hash).
@@ -1234,6 +1144,27 @@ def embedding_dup_pairs(
     candidate pairs.  Degenerate buckets (e.g. all-zero or boilerplate
     embeddings hashing identically) are capped by the hot-bucket guard.
     """
+    with CacheScope() as scope:
+        return _embedding_pairs(
+            scope, df, vector_col, pk, threshold, bands, rows, seed, dim,
+            max_bucket_size,
+        ).localCheckpoint(eager=True)
+
+
+def _embedding_pairs(
+    scope: CacheScope,
+    df: DataFrame,
+    vector_col: str,
+    pk: str,
+    threshold: float,
+    bands: int | None,
+    rows: int | None,
+    seed: int,
+    dim: int | None,
+    max_bucket_size: int,
+) -> DataFrame:
+    """The lazy pair query behind :func:`embedding_dup_pairs`; its caches
+    live in ``scope``."""
     import math
 
     if bands is None or rows is None:
@@ -1288,27 +1219,28 @@ def embedding_dup_pairs(
 
     band_udf = F.pandas_udf(_band_hashes, T.ArrayType(T.LongType()))
 
-    # ONE persisted (pk, vec, norm, bands) table — the _minhash_base
-    # convention (round 15): without the barrier the band-hash UDF ran
+    # ONE kept (pk, vec, norm, bands) table — the _minhash_base
+    # convention: without the barrier the band-hash UDF ran
     # TWICE (the bucket-stats aggregate and the join-back inside
     # banded_candidates each evaluate bandtab) and the vector+norm
     # projection re-scanned the corpus twice more for the two verify
     # joins — four corpus passes for one pair set.  At 100 TB the
     # banded signature table is a persisted artifact of the corpus
     # build anyway.
-    hashed = _spread(df).select(
-        F.col(pk).alias("_pk"),
-        v.alias("_v"),
-        norm.alias("_n"),
-        band_udf(v).alias("_bands"),
-    ).persist()
-    handles: list = [hashed]
+    hashed = scope.keep(
+        _spread(df).select(
+            F.col(pk).alias("_pk"),
+            v.alias("_v"),
+            norm.alias("_n"),
+            band_udf(v).alias("_bands"),
+        )
+    )
     bandtab = hashed.select(
         "_pk", F.posexplode(F.col("_bands")).alias("_band_idx", "_band_hash")
     )
-    cand = banded_candidates(
-        bandtab, ["_band_idx", "_band_hash"], max_bucket_size=max_bucket_size,
-        handles=handles if materialize else None,
+    cand = _banded_candidates(
+        scope, bandtab, ["_band_idx", "_band_hash"],
+        max_bucket_size=max_bucket_size,
     )
 
     # vectors join back by pk for candidate pairs only (narrow shuffle of
@@ -1317,7 +1249,7 @@ def embedding_dup_pairs(
     cos = F.when(
         (F.col("n_a") < 1e-12) | (F.col("n_b") < 1e-12), F.lit(0.0)
     ).otherwise(_dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")))
-    pairs = (
+    return (
         cand.join(
             vecs.select(
                 F.col("_pk").alias("id_a"), F.col("_v").alias("v_a"), F.col("_n").alias("n_a")
@@ -1334,13 +1266,6 @@ def embedding_dup_pairs(
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
-    if materialize:
-        try:
-            pairs = pairs.localCheckpoint(eager=True)
-        finally:
-            for h in handles:
-                h.unpersist()
-    return pairs
 
 
 # ---------------------------------------------------------------------------
@@ -1431,17 +1356,14 @@ def semantic_dup_pairs(
     rows = base.select(
         F.col("_pk"), nv.alias("_nv"), assign_udf(F.col("_v")).alias("_c")
     )
-    rows = _spread(rows).persist()
-    try:
-        pk_t = df.schema[pk].dataType.simpleString()
-        out = _chunked_block_matches(
+    pk_t = df.schema[pk].dataType.simpleString()
+    with CacheScope() as scope:
+        rows = scope.keep(_spread(rows))
+        return _chunked_block_matches(
             rows, rows, threshold, max_cluster_rows, seed,
             out_a="id_a", out_b="id_b", a_type=pk_t, b_type=pk_t,
             symmetric=True,
         )
-    finally:
-        rows.unpersist()
-    return out
 
 
 def _chunked_block_matches(
@@ -1461,12 +1383,12 @@ def _chunked_block_matches(
     ``out_a < out_b``) and :func:`semantic_dedup_against` (asymmetric:
     every left×right pair within a co-populated cluster).
 
-    Inputs are ``(_pk, _nv, _c)`` tables the CALLER persists; clusters
+    Inputs are ``(_pk, _nv, _c)`` tables the CALLER keeps; clusters
     are hash-split into ≤ ``max_cluster_rows`` chunks per side and every
     admitted (chunk, chunk) block runs as one bounded cogrouped matmul.
     Returns the eagerly-checkpointed ``(out_a, out_b, cos_sim)`` matches
     (``round(cos, 4) ≥ threshold``) — materialized while the caller's
-    caches are still live, so the caller can unpersist immediately.
+    caches are still live, so the caller's block can release them.
     """
     import math
 
@@ -1695,25 +1617,24 @@ def line_dedup(
     # re-split and re-hash the whole corpus otherwise — the
     # _cap_ref_buckets rule one level up.  The _ls line array is
     # projected away before the cache, so the cached rows are four slim
-    # scalars per line; released below once the per-doc drop list is an
-    # eager checkpoint.  Interleaved A/B (5× each arm, sf0.1):
+    # scalars per line; released once the per-doc drop list is an eager
+    # checkpoint.  Interleaved A/B (5× each arm, sf0.1):
     # dedup_lines median 1.86 → 1.51 s, dedup_paragraphs 1.54 → 1.24 s.
-    lh = lh.select("_pk", "_pos", "_lh", "_keepable").persist()
-    # hotness over distinct (doc, hash) of non-empty lines only
-    hot = (
-        lh.filter(F.col("_keepable"))
-        .select("_pk", "_lh")
-        .distinct()
-        .groupBy("_lh")
-        .agg(F.count(F.lit(1)).alias("_nd"))
-        .filter(F.col("_nd") >= int(min_docs))
-        .select("_lh")
-    )
-    # persist the hot set across (gate count, semi-join), materialize the
-    # small per-doc drop list eagerly, release the cache — the operator
-    # is eager from here on, like tfidf_keywords' fit boundary
-    hot = hot.persist()
-    try:
+    with CacheScope() as scope:
+        lh = scope.keep(lh.select("_pk", "_pos", "_lh", "_keepable"))
+        # hotness over distinct (doc, hash) of non-empty lines only; the
+        # hot set is kept across (gate count, semi-join) and the small
+        # per-doc drop list materializes eagerly — the operator is eager
+        # from here on, like tfidf_keywords' fit boundary
+        hot = scope.keep(
+            lh.filter(F.col("_keepable"))
+            .select("_pk", "_lh")
+            .distinct()
+            .groupBy("_lh")
+            .agg(F.count(F.lit(1)).alias("_nd"))
+            .filter(F.col("_nd") >= int(min_docs))
+            .select("_lh")
+        )
         drops = (
             _gated_semi_join(lh, hot, "_lh", max_broadcast_rows)
             .filter(F.col("_keepable"))
@@ -1721,9 +1642,6 @@ def line_dedup(
             .agg(F.collect_set("_pos").alias("_drops"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        hot.unpersist()
-        lh.unpersist()
     joined = df.join(
         drops.select(F.col("_pk").alias(pk), "_drops"), pk, "left"
     )
@@ -1804,34 +1722,30 @@ def span_dedup(
     # gram fold is the operator's dominant kernel — O(k·n) interpreted
     # HOF work per document — and without the barrier both passes
     # recompute it from the raw text (_cap_ref_buckets' rule).
-    # Released below once the per-doc starts are an eager checkpoint.
+    # Released once the per-doc starts are an eager checkpoint.
     # Interleaved A/B (6× each arm, sf0.1): dedup_spans median
     # 3.00 → 2.55 s.  At corpus scale the cached rows are three longs
     # per token window — the Lee et al. materialization tradeoff, far
     # smaller than their suffix array.
-    pos_grams = slim.select(
-        "_pk", F.posexplode(grams).alias("_s", "_g")
-    ).persist()  # _s: 0-based window start
-    hot = (
-        pos_grams.select("_pk", "_g")
-        .distinct()
-        .groupBy("_g")
-        .agg(F.count(F.lit(1)).alias("_nd"))
-        .filter(F.col("_nd") >= int(min_docs))
-        .select("_g")
-    )
-    # persist across (gate count, semi-join); eager per-doc starts; release
-    hot = hot.persist()
-    try:
+    with CacheScope() as scope:
+        pos_grams = scope.keep(
+            slim.select("_pk", F.posexplode(grams).alias("_s", "_g"))
+        )  # _s: 0-based window start
+        # hot set kept across (gate count, semi-join); eager per-doc starts
+        hot = scope.keep(
+            pos_grams.select("_pk", "_g")
+            .distinct()
+            .groupBy("_g")
+            .agg(F.count(F.lit(1)).alias("_nd"))
+            .filter(F.col("_nd") >= int(min_docs))
+            .select("_g")
+        )
         starts = (
             _gated_semi_join(pos_grams, hot, "_g", max_broadcast_rows)
             .groupBy("_pk")
             .agg(F.collect_set("_s").alias("_starts"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        hot.unpersist()
-        pos_grams.unpersist()
     joined = df.join(
         starts.select(F.col("_pk").alias(pk), "_starts"), pk, "left"
     )
@@ -2045,13 +1959,15 @@ def fingerprint_against(
     key_arr, _, key_bits = _simhash_block_keys(nbits, max_hamming)
     # NULL fingerprints drop (undecodable-blob convention) and negative
     # ones raise — same front door as fingerprint_pairs (round 14)
-    mk = lambda d: _spread(d).filter(  # noqa: E731
-        F.col(fp_col).isNotNull()
-    ).select(
-        F.col(pk).alias("_pk"), _nonneg_fp_guard(fp_col).alias("_s")
-    ).persist()
-    ns, rs = mk(new), mk(ref)
-    try:
+    with CacheScope() as scope:
+        ns, rs = (
+            scope.keep(
+                _spread(d)
+                .filter(F.col(fp_col).isNotNull())
+                .select(F.col(pk).alias("_pk"), _nonneg_fp_guard(fp_col).alias("_s"))
+            )
+            for d in (new, ref)
+        )
         # Scale the ref-bucket cap with the EXPECTED bucket size
         # (ADVICE r8): fingerprint-key buckets hold ~n_ref/2^key_bits
         # rows by construction, so a fixed cap silently truncates
@@ -2090,9 +2006,6 @@ def fingerprint_against(
             .filter(F.col("hamming") <= int(max_hamming))
             .localCheckpoint(eager=True)
         )
-    finally:
-        ns.unpersist()
-        rs.unpersist()
     if return_matches:
         return matches.select(
             F.col("_npk").alias("new_pk"),
@@ -2122,9 +2035,9 @@ def _minhash_against(
 
     if bands == "auto":
         bands, rows = lsh_params(float(threshold), num_perm=128)
-    nb = _minhash_base(new, text_col, pk, shingle_n, bands, rows, seed)
-    rb = _minhash_base(ref, text_col, pk, shingle_n, bands, rows, seed)
-    try:
+    with CacheScope() as scope:
+        nb = scope.keep(_minhash_base(new, text_col, pk, shingle_n, bands, rows, seed))
+        rb = scope.keep(_minhash_base(ref, text_col, pk, shingle_n, bands, rows, seed))
         new_bands = nb.select(
             F.col("_pk").alias("_npk"),
             F.posexplode(F.col("_bands")).alias("_band_idx", "_band_hash"),
@@ -2134,10 +2047,12 @@ def _minhash_against(
         # and the candidate join only need (pk, band) — re-reading the
         # fat cache twice cost ~1 s of the r9 A/B's 3.3 s; the slim
         # explode is a few MB and both passes read it instead
-        raw_ref_bands = rb.select(
-            F.col("_pk").alias("_rpk"),
-            F.posexplode(F.col("_bands")).alias("_band_idx", "_band_hash"),
-        ).persist()
+        raw_ref_bands = scope.keep(
+            rb.select(
+                F.col("_pk").alias("_rpk"),
+                F.posexplode(F.col("_bands")).alias("_band_idx", "_band_hash"),
+            )
+        )
         ref_bands = _cap_ref_buckets(
             raw_ref_bands, ["_band_idx", "_band_hash"], "_rpk",
             max_bucket_size,
@@ -2161,18 +2076,9 @@ def _minhash_against(
             .withColumn("jaccard", F.round(inter / union, 4))
             .filter(F.col("jaccard") >= threshold)
         )
-        # materialize the (small) match set, then RELEASE both signature
-        # caches — review finding: repeated incremental-ingestion calls
-        # otherwise accumulate a cached copy of the whole accepted corpus
-        # per call until eviction pressure degrades the session
+        # materialize the (small) match set before the block releases
+        # both signature caches
         matches = matches.localCheckpoint(eager=True)
-    finally:
-        nb.unpersist()
-        rb.unpersist()
-        try:
-            raw_ref_bands.unpersist()
-        except NameError:  # lsh_params/_minhash_base raised before bind
-            pass
     if return_matches:
         return matches.select(
             F.col("_npk").alias("new_pk"),
@@ -2242,15 +2148,18 @@ def semantic_dedup_against(
             .filter(F.col("_n") > 1e-12)
         )
         nv = F.transform(F.col("_v"), lambda x: x / F.col("_n"))
-        return _spread(
-            base.select(
-                F.col("_pk"), nv.alias("_nv"), assign_udf(F.col("_v")).alias("_c")
+        return scope.keep(
+            _spread(
+                base.select(
+                    F.col("_pk"), nv.alias("_nv"),
+                    assign_udf(F.col("_v")).alias("_c"),
+                )
             )
-        ).persist()
+        )
 
-    nrows = _prep(new)
-    rrows = _prep(ref)
-    try:
+    with CacheScope() as scope:
+        nrows = _prep(new)
+        rrows = _prep(ref)
         # each side keeps ITS OWN pk type (review finding: typing ref_pk
         # with new's pk type silently coerced large reference keys)
         matches = _chunked_block_matches(
@@ -2260,9 +2169,6 @@ def semantic_dedup_against(
             b_type=ref.schema[pk].dataType.simpleString(),
             symmetric=False,
         )
-    finally:
-        nrows.unpersist()
-        rrows.unpersist()
     if return_matches:
         return matches
     dropped = matches.select(F.col("new_pk").alias(pk)).distinct()

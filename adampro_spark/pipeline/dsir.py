@@ -42,6 +42,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adampro_spark.caching import CacheScope
 from adampro_spark.pipeline.mix import _token_hashes, _unit_hash
 from adampro_spark.pipeline.text import HASH_P
 
@@ -134,32 +135,31 @@ def fit_dsir(
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
-    if isinstance(target, Column):
-        # one feature pass, two conditional counts: the target flag is
-        # evaluated per document and rides the slim (bucket, flag) rows
-        both = (
-            raw.select(
-                _token_hashes(text_col).alias("_th"), target.alias("_t")
+    with CacheScope() as scope:
+        if isinstance(target, Column):
+            # one feature pass, two conditional counts: the target flag is
+            # evaluated per document and rides the slim (bucket, flag) rows
+            raw_c = tgt_c = scope.keep(
+                raw.select(
+                    _token_hashes(text_col).alias("_th"), target.alias("_t")
+                )
+                .select(
+                    F.explode(
+                        _doc_features(F.col("_th"), n_buckets, bigrams)
+                    ).alias("bucket"),
+                    F.col("_t"),
+                )
+                .groupBy("bucket")
+                .agg(
+                    F.count(F.lit(1)).alias("_rc"),
+                    F.coalesce(
+                        F.sum(F.col("_t").cast("long")), F.lit(0)
+                    ).alias("_tc"),
+                )
             )
-            .select(
-                F.explode(
-                    _doc_features(F.col("_th"), n_buckets, bigrams)
-                ).alias("bucket"),
-                F.col("_t"),
-            )
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("_rc"),
-                F.coalesce(
-                    F.sum(F.col("_t").cast("long")), F.lit(0)
-                ).alias("_tc"),
-            )
-        )
-        raw_c = tgt_c = both.persist()
-    else:
-        raw_c = counts(raw).withColumnRenamed("cnt", "_rc").persist()
-        tgt_c = counts(target).withColumnRenamed("cnt", "_tc").persist()
-    try:
+        else:
+            raw_c = scope.keep(counts(raw).withColumnRenamed("cnt", "_rc"))
+            tgt_c = scope.keep(counts(target).withColumnRenamed("cnt", "_tc"))
         if raw_c is tgt_c:
             tot = raw_c.agg(
                 F.coalesce(F.sum("_rc"), F.lit(0)).alias("nr"),
@@ -189,10 +189,6 @@ def fit_dsir(
                 )
             ).alias("log_ratio"),
         ).localCheckpoint(eager=True)  # ≤ 2·n_buckets rows
-    finally:
-        raw_c.unpersist()
-        if tgt_c is not raw_c:
-            tgt_c.unpersist()
     meta = {
         "n_raw": n_raw,
         "n_target": n_tgt,

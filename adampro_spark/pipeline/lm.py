@@ -36,6 +36,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adampro_spark.caching import CacheScope
 from adampro_spark.pipeline.text import tokens_expr
 
 DEFAULT_VOCAB = 50_000
@@ -70,8 +71,8 @@ def fit_unigram_lm(
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    counts = counts.persist()
-    try:
+    with CacheScope() as scope:
+        counts = scope.keep(counts)
         tot = counts.agg(
             F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"),
             F.count(F.lit(1)).alias("d"),
@@ -83,11 +84,8 @@ def fit_unigram_lm(
             counts.orderBy(F.col("cnt").desc(), F.col("tok").asc())
             .limit(vocab_size)
             .withColumn("logp", F.log10((F.col("cnt") + 1) / F.lit(denom)))
+            .localCheckpoint(eager=True)
         )
-        # materialize before unpersisting the parent plan
-        vocab = vocab.localCheckpoint(eager=True)
-    finally:
-        counts.unpersist()
     meta = {
         "n_tokens": n,
         "vocab_size_eff": v_eff,
@@ -151,9 +149,8 @@ def lm_token_table(
     """The shared ``(pk, by, tok)`` token explode (round 16, verdict r15
     #4): the per-group LM FIT, the per-group SCORE, and the shared-LM
     score with ``carry=[by]`` each tokenize the same corpus — a caller
-    that persists THIS table (and releases it, the handles convention)
-    pays the tokenize once and feeds all three via their ``exploded=``
-    parameter.  ``tok`` is NULL for empty documents (explode_outer — the
+    that keeps THIS table in its cache block pays the tokenize once and
+    feeds all three via their ``exploded=`` parameter.  ``tok`` is NULL for empty documents (explode_outer — the
     scoring contract); fit consumers drop the NULLs, which reproduces
     the plain-explode fit exactly."""
     return df.select(
@@ -216,8 +213,8 @@ def fit_unigram_lm_by(
             .groupBy(by, "tok")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-    counts = counts.persist()
-    try:
+    with CacheScope() as scope:
+        counts = scope.keep(counts)
         tots = {
             r[by]: (int(r["n"]), int(r["d"]))
             for r in counts.groupBy(by)
@@ -270,10 +267,8 @@ def fit_unigram_lm_by(
                 "logp",
                 F.log10((F.col("cnt") + 1) / F.element_at(denom_map, F.col(by))),
             )
-            .localCheckpoint(eager=True)  # materialize before unpersist
+            .localCheckpoint(eager=True)  # materialize before release
         )
-    finally:
-        counts.unpersist()
     return vocab_by, metas
 
 
@@ -536,52 +531,51 @@ def fit_bigram_lm(
             ),
         ),
     ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
-    pall = (
-        staged.select(F.explode(pos_arr).alias("_p"))
-        .select("_p.prev", "_p.cur")
-        .groupBy("prev", "cur")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
-    )
-    # the unigram fit off the pair marginal — counts, ordering, ties,
-    # smoothing denominator all BIT-IDENTICAL to fit_unigram_lm (pinned
-    # by tests/test_round16_opt.py)
-    counts = pall.groupBy(F.col("cur").alias("tok")).agg(
-        F.sum("cnt").alias("cnt")
-    )
-    tot = counts.agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"),
-        F.count(F.lit(1)).alias("d"),
-    ).collect()[0]
-    n_tok, d_tok = int(tot["n"]), int(tot["d"])
-    v_eff = min(vocab_size, d_tok)
-    u_denom = float(n_tok + v_eff + 1)
-    vocab = (
-        counts.orderBy(F.col("cnt").desc(), F.col("tok").asc())
-        .limit(vocab_size)
-        .withColumn("logp", F.log10((F.col("cnt") + 1) / F.lit(u_denom)))
-        .localCheckpoint(eager=True)
-    )
-    meta: dict[str, Any] = {
-        "n_tokens": n_tok,
-        "vocab_size_eff": v_eff,
-        "oov_logp": math.log10(1.0 / u_denom),
-        "base": 10,
-        "smoothing": "add_one",
-    }
-    # bigram table: NULL-prev groups are exactly the first-token rows,
-    # so filtering them leaves the grouped (prev, cur, cnt) pair table
-    pairs = pall.filter(F.col("prev").isNotNull())
-    top = (
-        pairs.orderBy(F.col("cnt").desc(), F.col("prev").asc(), F.col("cur").asc())
-        .limit(bigram_size)
-        .localCheckpoint(eager=True)
-    )
-    meta["lam"] = float(lam)
-    meta["denom"] = float(meta["n_tokens"] + meta["vocab_size_eff"] + 1)
-    meta["bigram_size_eff"] = top.count()
-    if smoothing == "kn":
-        try:
+    with CacheScope() as scope:
+        pall = scope.keep(
+            staged.select(F.explode(pos_arr).alias("_p"))
+            .select("_p.prev", "_p.cur")
+            .groupBy("prev", "cur")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        # the unigram fit off the pair marginal — counts, ordering, ties,
+        # smoothing denominator all BIT-IDENTICAL to fit_unigram_lm (pinned
+        # by tests/test_round16_opt.py)
+        counts = pall.groupBy(F.col("cur").alias("tok")).agg(
+            F.sum("cnt").alias("cnt")
+        )
+        tot = counts.agg(
+            F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"),
+            F.count(F.lit(1)).alias("d"),
+        ).collect()[0]
+        n_tok, d_tok = int(tot["n"]), int(tot["d"])
+        v_eff = min(vocab_size, d_tok)
+        u_denom = float(n_tok + v_eff + 1)
+        vocab = (
+            counts.orderBy(F.col("cnt").desc(), F.col("tok").asc())
+            .limit(vocab_size)
+            .withColumn("logp", F.log10((F.col("cnt") + 1) / F.lit(u_denom)))
+            .localCheckpoint(eager=True)
+        )
+        meta: dict[str, Any] = {
+            "n_tokens": n_tok,
+            "vocab_size_eff": v_eff,
+            "oov_logp": math.log10(1.0 / u_denom),
+            "base": 10,
+            "smoothing": "add_one",
+        }
+        # bigram table: NULL-prev groups are exactly the first-token rows,
+        # so filtering them leaves the grouped (prev, cur, cnt) pair table
+        pairs = pall.filter(F.col("prev").isNotNull())
+        top = (
+            pairs.orderBy(F.col("cnt").desc(), F.col("prev").asc(), F.col("cur").asc())
+            .limit(bigram_size)
+            .localCheckpoint(eager=True)
+        )
+        meta["lam"] = float(lam)
+        meta["denom"] = float(meta["n_tokens"] + meta["vocab_size_eff"] + 1)
+        meta["bigram_size_eff"] = top.count()
+        if smoothing == "kn":
             # N1+(.cur): distinct left contexts per word (pairs are
             # already distinct by (prev, cur), so this is a row count)
             cont = pairs.groupBy("cur").agg(F.count(F.lit(1)).alias("cont"))
@@ -618,13 +612,9 @@ def fit_bigram_lm(
                 )
                 .localCheckpoint(eager=True)
             )
-        finally:
-            pall.unpersist()
-        meta["smoothing"] = "kn"
-        meta["discount"] = float(discount)
-        meta["cont_denom"] = float(n_types + meta["vocab_size_eff"] + 1)
-    else:
-        pall.unpersist()
+            meta["smoothing"] = "kn"
+            meta["discount"] = float(discount)
+            meta["cont_denom"] = float(n_types + meta["vocab_size_eff"] + 1)
     return vocab, top, meta
 
 

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from adampro_spark.caching import CacheScope
+
 MEDIA_META = T.StructType(
     [
         T.StructField("format", T.StringType()),
@@ -3908,8 +3910,7 @@ def curate_media(
 
     from adampro_spark.pipeline.dedup import dup_groups, fingerprint_pairs
 
-    # validate BEFORE any work (ADVICE r13: raising after the persist
-    # leaked the cached probe flags)
+    # validate before any work
     if dedup not in (None, "exact", "dhash"):
         raise ValueError(f"unknown curate_media dedup {dedup!r}")
 
@@ -3953,8 +3954,8 @@ def curate_media(
         }
 
     if dedup is None:
-        stats = stats.persist()
-        try:
+        with CacheScope() as scope:
+            stats = scope.keep(stats)
             agg = stats.agg(*gate_aggs).first()
             if stage_timings is not None:
                 stage_timings["probe_sec"] = round(
@@ -3965,8 +3966,6 @@ def curate_media(
                 eager=True
             )
             return df.join(keep, pk, "left_semi"), report
-        finally:
-            stats.unpersist()
 
     # exact stage fused into the SAME cached table and the SAME agg job
     # (round 15): rank byte-identical (sha, length) families with one
@@ -3996,14 +3995,14 @@ def curate_media(
         ),
         "n_bytes",
     ).orderBy(pk)
-    stats = stats.withColumn("_rn", F.row_number().over(w)).persist()
     base_c = kept_c & (F.col("_rn") == 1)
     mod_names = (
         [n for n, *_ in _modality_specs(decoder, content_col, pk)]
         if dedup == "dhash"
         else []
     )
-    try:
+    with CacheScope() as scope:
+        stats = scope.keep(stats.withColumn("_rn", F.row_number().over(w)))
         agg = stats.agg(
             *gate_aggs,
             F.coalesce(
@@ -4056,12 +4055,8 @@ def curate_media(
                 # tag rides the band-bucket key (group_cols), so pairs
                 # never cross modalities — identical pair set to the old
                 # per-modality call series, one explode/join instead of
-                # three
-                # materialize=True (round 16): the pair set checkpoints
-                # eagerly and the internal fingerprint/tagged-band caches
-                # release before resolution — repeated curate_media calls
-                # in one session no longer accumulate them; the flat pair
-                # input also lets dup_groups take its lazy-persist arm
+                # three.  The pair set comes back checkpointed, which
+                # also lets dup_groups keep its edge list flat
                 pairs = fingerprint_pairs(
                     base.filter(F.col("_mod").isNotNull()),
                     "dhash",
@@ -4069,7 +4064,6 @@ def curate_media(
                     max_hamming=int(max_hamming),
                     nbits=63,
                     group_cols=("_mod",),
-                    materialize=True,
                 )
                 nd_drops = (
                     dup_groups(pairs)
@@ -4098,7 +4092,7 @@ def curate_media(
         report["n_output"] = n_after_gates - n_exact_dropped - n_neardup
         all_drops = reduce(lambda a, b: a.unionByName(b), drop_dfs)
         # slim survivor-pk list, checkpointed so the returned lineage
-        # never re-runs the decode kernel after stats unpersists; the
+        # never re-runs the decode kernel after stats is released; the
         # blobs make their single second pass through this semi-join
         keep = (
             kept.select(pk)
@@ -4106,8 +4100,6 @@ def curate_media(
             .localCheckpoint(eager=True)
         )
         return df.join(keep, pk, "left_semi"), report
-    finally:
-        stats.unpersist()
 
 
 def curate_media_against(
@@ -4167,12 +4159,13 @@ def curate_media_against(
     t0 = time.perf_counter()
     want_sha = dedup in ("exact", "dhash")
     want_dh = dedup == "dhash"
-    stats = _media_stats(
-        new, content_col, pk, formats, min_width, min_height,
-        want_sha=want_sha, want_dhash=want_dh, decoder=decoder,
-    ).persist()
-    ref_stats = None
-    try:
+    with CacheScope() as scope:
+        stats = scope.keep(
+            _media_stats(
+                new, content_col, pk, formats, min_width, min_height,
+                want_sha=want_sha, want_dhash=want_dh, decoder=decoder,
+            )
+        )
         agg = stats.agg(
             F.count(F.lit(1)).alias("n_input"),
             F.coalesce(
@@ -4207,11 +4200,13 @@ def curate_media_against(
 
         # the reference side: probed + hashed unconditionally (it is
         # never gated), one blob pass for sha AND every modality hash
-        ref_stats = _media_stats(
-            ref, content_col, pk, None, None, None,
-            want_sha=want_sha, want_dhash=want_dh, decoder=decoder,
-            gate_hashes=False,
-        ).persist()
+        ref_stats = scope.keep(
+            _media_stats(
+                ref, content_col, pk, None, None, None,
+                want_sha=want_sha, want_dhash=want_dh, decoder=decoder,
+                gate_hashes=False,
+            )
+        )
 
         # exact-vs-ref: (sha256, length) semi-join — slim fingerprint
         # tables on both sides, never the blobs
@@ -4296,10 +4291,6 @@ def curate_media_against(
             .localCheckpoint(eager=True)
         )
         return new.join(keep, pk, "left_semi"), report
-    finally:
-        stats.unpersist()
-        if ref_stats is not None:
-            ref_stats.unpersist()
 
 
 def media_probe(content: bytes) -> dict:

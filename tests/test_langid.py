@@ -341,19 +341,17 @@ def test_ccnet_langid_min_gap_drops_low_confidence(spark, fitted):
     rows = [(i, (HELDOUT["en"] + " ") * 3) for i in range(6)]
     rows += [(100 + i, (t + " ") * 6) for i, t in enumerate(JUNK_REJECT[:3])]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    rep, handles = {}, []
+    rep = {}
     out = ccnet_pipeline(
         df, per_language_lm=True, vocab_size=32,
         langid_model=model, langid_meta=meta,
         langid_min_gap=LANGID_GAP_FLOOR,
         curate_kw=dict(langs=None, min_tokens=3, min_quality=0.0, dedup=None),
-        report_out=rep, handles=handles,
+        report_out=rep,
     )
     ids = {r["doc_id"] for r in out.collect()}
     assert ids <= set(range(6)) and len(ids) >= 1
     assert not (ids & {100, 101, 102})
-    for h in handles:
-        h.unpersist()
 
 
 # ---------------------------------------------------------------------------

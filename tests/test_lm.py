@@ -575,11 +575,15 @@ def test_ccnet_pipeline_composition(spark, tables, monkeypatch):
         acc.add(1)
         return s
 
-    rep, handles = {}, []
+    rep = {}
     out = ccnet_pipeline(
-        base.withColumn("text", tag("text")), vocab, meta,
-        report_out=rep, handles=handles,
+        base.withColumn("text", tag("text")), vocab, meta, report_out=rep,
     )
+    # (b) the tagged corpus is kept across curate's gate aggregate and the
+    # survivor lineage, so the tag UDF ran exactly once per input row —
+    # and the returned output is materialized, so nothing replays it
+    fills = acc.value
+    assert fills == base.count(), "the langid-tagged corpus was re-evaluated"
     # (a0) verdict r10 #3: report_out costs ONE gate pass — the by_lang
     # report is a DRIVER-BUILT LocalRelation (its rows came out of
     # curate's one grouped gate aggregate), so materializing it scans
@@ -600,13 +604,6 @@ def test_ccnet_pipeline_composition(spark, tables, monkeypatch):
         rep["n_output"], max(r["n_pass"] for r in bl_rows)
     )
 
-    # (b) materialize the persisted handles once (tagged corpus +
-    # survivors); after that the upstream chain (the tag UDF) must
-    # NEVER run again
-    assert len(handles) == 2
-    for h in handles:
-        h.count()
-    fills = acc.value
     got = out.collect()
     assert acc.value == fills, "lm_bucket replayed the curate lineage"
     out.collect()
@@ -644,8 +641,6 @@ def test_ccnet_pipeline_composition(spark, tables, monkeypatch):
     assert rep["by_lang"].columns == two_pass.columns
     want_rows = {tuple(r) for r in two_pass.collect()}
     assert {tuple(r) for r in rep["by_lang"].collect()} == want_rows
-    for h in handles:
-        h.unpersist()
 
 
 def test_lm_bucket_by_carries_group_without_pk_join(spark, tables):
@@ -759,16 +754,23 @@ def test_ccnet_per_language_lm_mode(spark, tables):
     the survivors and buckets each language against its own model —
     equals the hand-rolled fit_by + bucket_by on the same survivors."""
     from adampro_spark.pipeline.ccnet import ccnet_pipeline
+    from adampro_spark.pipeline.curate import curate
+    from adampro_spark.pipeline.langid import fit_langid, trained_langid_col
     from adampro_spark.pipeline.lm import fit_unigram_lm_by, lm_bucket_by
 
     base = tables["documents"].select("doc_id", "text").limit(150)
     base = spark.createDataFrame(base.collect(), "doc_id long, text string")
-    rep, handles = {}, []
+    rep = {}
     out = ccnet_pipeline(
-        base, per_language_lm=True, vocab_size=64,
-        report_out=rep, handles=handles,
+        base, per_language_lm=True, vocab_size=64, report_out=rep,
     ).collect()
-    surv = handles[-1]
+    lmodel, lmeta = fit_langid()
+    tagged = base.withColumn(
+        "lang_cc", trained_langid_col(lmodel, lmeta, "text")
+    ).filter(F.col("lang_cc") != "und")
+    surv, _ = curate(
+        tagged, langs=None, min_tokens=20, min_quality=0.3, dedup="exact"
+    )
     vocab_by, metas = fit_unigram_lm_by(surv, by="lang_cc", vocab_size=64)
     want = lm_bucket_by(
         surv, vocab_by, metas, by="lang_cc", method="ntile"
@@ -776,8 +778,6 @@ def test_ccnet_per_language_lm_mode(spark, tables):
     key = lambda r: (r["doc_id"], r["lang_cc"], r["bucket"])  # noqa: E731
     assert sorted(map(key, out)) == sorted(map(key, want))
     assert len(out) == rep["n_output"]
-    for h in handles:
-        h.unpersist()
 
     with pytest.raises(ValueError, match="vocab"):
         ccnet_pipeline(base)
@@ -847,14 +847,11 @@ def test_ccnet_buckets_separate_clean_from_corrupted(spark, tables):
     ]
     rows = base + [(100_000 + i, corrupt(t)) for i, (_d, t) in enumerate(base[:20])]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    handles: list = []
     out = ccnet_pipeline(
-        df, per_language_lm=True, vocab_size=64, handles=handles,
+        df, per_language_lm=True, vocab_size=64,
         curate_kw=dict(langs=None, min_tokens=5, min_quality=0.0, dedup=None),
     )
     got = {r["doc_id"]: r["bucket"] for r in out.collect()}
-    for h in handles:
-        h.unpersist()
     rank = {"head": 0, "middle": 1, "tail": 2}
     corrupted = [got[k] for k in got if k >= 100_000]
     assert corrupted, "corrupted docs vanished from the output"

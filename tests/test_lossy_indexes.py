@@ -92,6 +92,7 @@ def test_lsh(spark, gt_df, golden):
     q = load_query()
     res = lsh_knn(gt_df, "vectorfield", idx, meta, q, K, "manhattan")
     rows = res.select("tid", "ap_distance").collect()
+    idx.unpersist()
     # LSH with a mean-max radius admits broad candidate sets; top-1 must hold
     assert rows, "LSH returned no candidates"
     top_dist, top_tid = golden[0]
@@ -163,6 +164,7 @@ def test_ecp_frac_budget_scales_with_corpus(spark):
     assert r_frac >= 0.75
     # probing everything is exact — the budget is honest about its units
     assert recall(times_k=5, frac=1.0) == 1.0
+    idx.unpersist()
 
 
 def test_default_budget_holds_recall_across_scales(spark):

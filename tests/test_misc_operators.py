@@ -56,6 +56,7 @@ def test_fulltext_index_matches_scan(spark, docs, tmp_path):
     assert fb.count() == len(a)
 
 
+@pytest.mark.holds_result_cache
 def test_result_cache_lru(spark):
     from adampro_spark.operators.misc import ResultCache
 
@@ -397,6 +398,7 @@ def test_index_load_recovers_from_crashed_swap(spark, tmp_path):
     assert os.path.exists(path) and not os.path.exists(path + "_old")
 
 
+@pytest.mark.holds_result_cache
 def test_result_cache_concurrent_compute_once(spark):
     """Concurrent callers for the same query id must share ONE computed
     DataFrame (per-key in-flight gate): the old race ran fn() per caller

@@ -59,6 +59,7 @@ def test_split_dataset_disjoint_exhaustive_stable(spark, docs):
         for r in split_dataset(docs, w, salt="v2").collect()
     }
     assert any(other[k] != full[k] for k in full)
+    out.unpersist()
 
 
 def test_split_dataset_validates_weights(spark, docs):
@@ -97,6 +98,7 @@ def test_sample_sources_rates_and_determinism(spark, docs):
     assert ids1 == ids2
     with pytest.raises(ValueError):
         sample_sources(docs, {"src1": 1.5})
+    out.unpersist()
 
 
 def test_decontaminate_drops_exact_ngram_overlap(spark, docs):
@@ -156,6 +158,7 @@ def test_pack_sequences_budget_and_determinism(spark, docs):
         .collect()
     }
     assert a == b
+    out.unpersist()
 
 
 def test_pack_after_shuffle_preserves_order(spark, docs):

@@ -69,8 +69,16 @@ def test_minhash_catches_planted_near_dups(docs):
 
 
 def test_minhash_plan_is_bucketed_not_cartesian(docs):
+    """Read off the lazy pair query (the public generator returns a
+    checkpoint, whose plan is a bare scan of the materialized rows)."""
+    from adampro_spark.caching import CacheScope
+    from adampro_spark.pipeline.dedup import _minhash_pairs
+
     corpus = _with_truncated_copies(docs)
-    plan = minhash_dup_pairs(corpus)._jdf.queryExecution().executedPlan().toString()
+    with CacheScope() as scope:
+        pairs = _minhash_pairs(scope, corpus, "text", "doc_id", 0.7, 8, 32, 4, 42, 1024)
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -116,16 +124,39 @@ def test_hot_bucket_guard_exact_below_cap(docs):
 
 def test_embedding_band_join_carries_no_vectors(emb):
     """The band self-join must shuffle only (pk, band_idx, band_hash) —
-    vectors join back by pk for candidates (never ×bands duplicated)."""
-    plan = (
-        embedding_dup_pairs(emb, threshold=0.9)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    vectors join back by pk for candidates (never ×bands duplicated).
+    Read off the lazy pair query, not the returned checkpoint."""
+    from adampro_spark.caching import CacheScope
+    from adampro_spark.pipeline.dedup import _embedding_pairs
+
+    with CacheScope() as scope:
+        pairs = _embedding_pairs(
+            scope, emb, "embedding", "vec_id", 0.9, None, None, 42, None, 1024
+        )
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    # the SortMergeJoin on the band keys must not list the vector column
-    for frag in plan.split("SortMergeJoin"):
-        head = frag.splitlines()[0] if frag else ""
-        assert "embedding" not in head, head
+    inputs = _band_join_inputs(pairs._jdf.queryExecution().executedPlan())
+    assert inputs, f"no join keyed on the band columns:\n{plan}"
+    for cols in inputs:
+        assert not {"_v", "v_a", "v_b", "embedding"} & set(cols), cols
+
+
+def _band_join_inputs(plan) -> list:
+    """Output column names of both inputs of every physical join keyed on
+    ``_band_idx``."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.inputPlan())
+            continue
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+        if "Join" in node.nodeName() and "_band_idx" in node.simpleString(100):
+            for kid in kids:
+                attrs = kid.output()
+                out.append([attrs.apply(i).name() for i in range(attrs.size())])
+        stack += kids
+    return out
 
 
 def test_knn_join_default_strategy_is_scale_safe(emb):
@@ -492,33 +523,21 @@ def test_dup_groups_long_chain_converges(spark):
 
 
 def test_dup_groups_star_beats_diameter_on_chains(spark):
-    """Round-7 verdict #5: a 64-node chain exceeds propagation's
-    max_iterations cap (the old default silently returned WRONG labels
-    for the far end of the chain); star alternation converges in
-    O(log²) rounds, and the "auto" default escapes to it, so the
-    default is now correct on arbitrary-diameter graphs."""
+    """A 64-node chain exceeds propagation's escape budget: dup_groups
+    switches to star alternation, which converges in O(log²) rounds,
+    so labels are correct on arbitrary-diameter graphs."""
     from adampro_spark.pipeline.dedup import ESCAPE_ROUNDS, dup_groups
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a long, id_b long"
     )
-    want = {i: 0 for i in range(64)}
-
-    st_star: dict = {}
-    got_star = {
-        r["id"]: r["survivor"]
-        for r in dup_groups(pairs, algorithm="star", _stats=st_star).collect()
-    }
-    assert got_star == want
-    assert st_star["rounds"] <= 10  # log²-ish, nowhere near diameter 63
-
-    st_auto: dict = {}
-    got_auto = {
-        r["id"]: r["survivor"]
-        for r in dup_groups(pairs, _stats=st_auto).collect()
-    }
-    assert got_auto == want
-    assert st_auto["algorithm"] == "auto->star"
+    st: dict = {}
+    got = {r["id"]: r["survivor"] for r in dup_groups(pairs, _stats=st).collect()}
+    assert got == {i: 0 for i in range(64)}
+    assert st["algorithm"] == "auto->star"
+    # the propagation rounds before the switch, then log²-ish star rounds
+    # — nowhere near the diameter 63
+    assert st["rounds"] <= ESCAPE_ROUNDS + 1 + 10
 
 
 def test_dup_groups_auto_stays_on_propagation_for_dense_graphs(spark):
@@ -541,8 +560,8 @@ def test_dup_groups_auto_stays_on_propagation_for_dense_graphs(spark):
 
 
 def test_dup_groups_all_algorithms_agree(spark):
-    """star / propagate / auto produce identical survivors on a random
-    graph (diameter within propagation's reach)."""
+    """dup_groups labels every node of a random graph with its
+    component minimum, exactly as a pure-Python union-find does."""
     import numpy as np
 
     from adampro_spark.pipeline.dedup import dup_groups
@@ -550,13 +569,18 @@ def test_dup_groups_all_algorithms_agree(spark):
     rng = np.random.RandomState(1)
     raw = {(int(a), int(b)) for a, b in rng.randint(0, 300, size=(200, 2)) if a != b}
     pairs = spark.createDataFrame(sorted(raw), "id_a long, id_b long")
-    outs = []
-    for alg in ("star", "propagate", "auto"):
-        outs.append(
-            {r["id"]: r["survivor"]
-             for r in dup_groups(pairs, algorithm=alg).collect()}
-        )
-    assert outs[0] == outs[1] == outs[2]
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in raw:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {x: find(x) for x in parent}
+    assert {r["id"]: r["survivor"] for r in dup_groups(pairs).collect()} == want
 
 
 def test_curate_end_to_end_gates_and_dedup(spark, docs):
@@ -876,19 +900,6 @@ def test_curate_minhash_composition_vs_brute_force(spark, sf_dir):
     assert got_ids == want_ids
     assert report["n_dup_dropped"] == len(drops)
     assert report["n_output"] == len(want_ids)
-
-
-def test_dup_groups_propagate_raises_at_cap_instead_of_mislabeling(spark):
-    """Review r7: explicit propagation that exhausts max_iterations used
-    to return silently wrong labels for the far end of a chain — it must
-    refuse loudly now."""
-    from adampro_spark.pipeline.dedup import dup_groups
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dup_groups(pairs, algorithm="propagate").collect()
 
 
 def test_lsh_params_s_curve_tuning():

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from adampro_spark.pipeline.dedup import (
     dedup_against,
     line_dedup,
-    minhash_dup_pairs,
     span_dedup,
 )
 
@@ -232,55 +231,6 @@ def test_dedup_against_exact_survives_h1_collision(spark):
     assert kept == {10, 12}  # collision text SURVIVES, true dup drops
     m = dedup_against(new, ref, method="exact", return_matches=True).collect()
     assert {(r["new_pk"], r["ref_pk"]) for r in m} == {(11, 1)}
-
-
-def test_minhash_materialize_releases_signature_cache(spark, tables):
-    """materialize=True must leave NO persisted plan behind (the
-    dedup_against recipe): the pair set is checkpointed, the
-    shingle/signature cache unpersisted."""
-    spark.catalog.clearCache()
-    docs = tables["documents"].select("doc_id", "text").limit(80)
-    pairs = minhash_dup_pairs(docs, threshold=0.8, materialize=True)
-    assert pairs.count() >= 0
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def test_embedding_materialize_releases_vector_cache(spark, tables):
-    """embedding_dup_pairs(materialize=True) must leave NO persisted plan
-    behind (the minhash recipe, ADVICE r15) and return the same pairs as
-    the lazy default."""
-    from adampro_spark.pipeline.dedup import embedding_dup_pairs
-
-    spark.catalog.clearCache()
-    emb = tables["embeddings"].select("vec_id", "embedding").limit(120)
-    lazy = {
-        (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in embedding_dup_pairs(emb, threshold=0.9).collect()
-    }
-    spark.catalog.clearCache()
-    eager = embedding_dup_pairs(emb, threshold=0.9, materialize=True)
-    got = {(r["id_a"], r["id_b"], r["cos_sim"]) for r in eager.collect()}
-    assert got == lazy
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def test_simhash_materialize_releases_fingerprint_cache(spark, tables):
-    """simhash_pairs(materialize=True) must leave NO persisted plan
-    behind (the minhash recipe) and return the same pairs as the lazy
-    default."""
-    from adampro_spark.pipeline.dedup import simhash_pairs
-
-    spark.catalog.clearCache()
-    docs = tables["documents"].select("doc_id", "text").limit(120)
-    lazy = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_pairs(docs, max_hamming=8).collect()
-    }
-    spark.catalog.clearCache()
-    eager = simhash_pairs(docs, max_hamming=8, materialize=True)
-    got = {(r["id_a"], r["id_b"], r["hamming"]) for r in eager.collect()}
-    assert got == lazy
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_curate_rejects_reserved_columns(spark, tables):

@@ -438,6 +438,7 @@ def test_dedup_against_simhash_reordered_copies(spark, tables):
 
     from adampro_spark.pipeline.dedup import dedup_against, simhash_expr
 
+    spark.catalog.clearCache()
     rng = np.random.RandomState(31)
     vocab = [f"w{i}" for i in range(500)]
     ref_rows = [
@@ -484,4 +485,4 @@ def test_dedup_against_simhash_reordered_copies(spark, tables):
     }
     matched_new = {a for a, _, _ in got}
     assert surv == {d for d, _ in reordered + fresh} - matched_new
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty() or True
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -319,18 +319,21 @@ def test_banded_candidates_tagging_is_aggregate_not_window(spark):
     ~n/2 rows through ONE WindowExec task that AQE cannot split.  The
     join-back IS splittable: the build side holds one row per bucket.
     Checked on a planted-degenerate table (one bucket = 50% of rows)."""
-    from adampro_spark.pipeline.dedup import banded_candidates
+    from adampro_spark.caching import CacheScope
+    from adampro_spark.pipeline.dedup import _banded_candidates
 
     rows = [(0, 0, i) for i in range(500)]  # degenerate bucket: 50%
     rows += [(1 + i % 7, i % 71, 500 + i) for i in range(500)]
     bandtab = spark.createDataFrame(rows, "band int, bkey long, _pk long")
-    handles = []
-    pairs = banded_candidates(
-        bandtab, ["band", "bkey"], max_bucket_size=64, handles=handles
-    )
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, f"window tagging is back:\n{plan}"
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    with CacheScope() as scope:
+        pairs = _banded_candidates(
+            scope, bandtab, ["band", "bkey"], max_bucket_size=64
+        )
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan, f"window tagging is back:\n{plan}"
+        # the tagging is present: a count/min aggregate joined back
+        assert "HashAggregate" in plan and "Join" in plan, plan
+        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     # hot bucket contributes exactly B-1 star pairs rooted at its min pk
     hot = {(0, i) for i in range(1, 500)}
     assert hot <= got
@@ -347,8 +350,6 @@ def test_banded_candidates_tagging_is_aggregate_not_window(spark):
         if a < c
     }
     assert got == hot | want_cold
-    for h in handles:
-        h.unpersist()
 
 
 def test_semantic_dedup_hot_cluster_chunks(spark):

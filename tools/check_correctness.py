@@ -7,6 +7,11 @@ row-count + schema (column names) + order-insensitive value equality
 canonical float normalization).  Exact equality here implies the
 driver's value-hash matches.
 
+It also sweeps for cache leaks: the session's cached-plan count is read
+before and after each row, and any row that leaves cached data behind
+is listed and fails the run.  ``cached_knn_manhattan`` is exempt — it
+holds its ResultCache entry on purpose.
+
 Usage: python tools/check_correctness.py [sf_dir] [name_filter...]
 """
 
@@ -24,6 +29,9 @@ import duckdb
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 FILTERS = sys.argv[2:]
+
+# rows that keep a cache alive on purpose (the query-result LRU)
+CACHE_HOLDERS = {"cached_knn_manhattan"}
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -67,9 +75,12 @@ def main():
     if FILTERS:
         qs = {k: v for k, v in qs.items() if any(f in k for f in FILTERS)}
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     n_pass = n_fail = n_rowsonly = 0
+    leaked = []
     for name, fn in qs.items():
         t0 = time.time()
+        cached_before = cache_manager.numCachedEntries()
         try:
             sdf = fn(spark, SF_DIR)
             srows = [tuple(r) for r in sdf.collect()]
@@ -79,6 +90,10 @@ def main():
             traceback.print_exc()
             n_fail += 1
             continue
+        finally:
+            n_new = cache_manager.numCachedEntries() - cached_before
+            if n_new > 0 and name not in CACHE_HOLDERS:
+                leaked.append(f"{name} (+{n_new})")
         sql = oracles.get(name)
         if sql is None:
             ok = len(srows) >= 0
@@ -116,7 +131,8 @@ def main():
             n_pass += 1
 
     print(f"\n{n_pass} ok, {n_fail} FAIL, {n_rowsonly} rows-only")
-    sys.exit(1 if n_fail else 0)
+    print(f"rows that left cached data: {', '.join(leaked) or 'none'}")
+    sys.exit(1 if n_fail or leaked else 0)
 
 
 if __name__ == "__main__":
