@@ -1,5 +1,5 @@
 """Cache ownership: the scoped helper, the one-owner rule over the
-library source, and clean sessions after the pair generators."""
+library source, and a clean session after deduplication."""
 
 import ast
 import pathlib
@@ -60,41 +60,13 @@ def test_library_persists_only_through_the_helper():
     assert not found, "cache calls outside adampro_spark/caching.py:\n" + "\n".join(found)
 
 
-def test_pair_generators_leave_the_session_clean(spark, tables):
-    """Each pair generator returns a checkpoint equal to its lazy query
-    run inside an open block, and leaves no cached plan behind."""
-    from adampro_spark.pipeline.dedup import (
-        _embedding_pairs,
-        _fingerprint_pairs,
-        _minhash_pairs,
-        deduplicate,
-        embedding_dup_pairs,
-        minhash_dup_pairs,
-        simhash_expr,
-        simhash_pairs,
-    )
+def test_deduplicate_leaves_the_session_clean(spark, tables):
+    """Deduplicating against a pair generator's checkpoint leaves no
+    cached plan behind.  The per-generator checks (equality with the lazy
+    query, released caches) are in tests/test_scale_gates.py."""
+    from adampro_spark.pipeline.dedup import deduplicate, minhash_dup_pairs
 
     spark.catalog.clearCache()
     docs = tables["documents"].select("doc_id", "text").limit(120)
-    emb = tables["embeddings"].select("vec_id", "embedding").limit(120)
-    rows = lambda df: set(map(tuple, df.collect()))  # noqa: E731
-
-    with CacheScope() as scope:
-        want_mh = rows(_minhash_pairs(scope, docs, "text", "doc_id", 0.8, 8, 32, 4, 42, 1024))
-        want_sh = rows(_fingerprint_pairs(
-            scope, docs.withColumn("_ap_fp", simhash_expr("text")), "_ap_fp",
-            "doc_id", 8, 30, 1024, (),
-        ))
-        want_emb = rows(_embedding_pairs(
-            scope, emb, "embedding", "vec_id", 0.9, None, None, 42, None, 1024,
-        ))
-    assert _entries(spark) == 0
-
-    assert rows(minhash_dup_pairs(docs, pk="doc_id", threshold=0.8)) == want_mh
-    assert _entries(spark) == 0
-    assert rows(simhash_pairs(docs, max_hamming=8)) == want_sh
-    assert _entries(spark) == 0
-    assert rows(embedding_dup_pairs(emb, threshold=0.9)) == want_emb
-    assert _entries(spark) == 0
     deduplicate(docs, minhash_dup_pairs(docs)).count()
     assert _entries(spark) == 0

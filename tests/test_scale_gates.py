@@ -233,6 +233,84 @@ def test_dedup_against_exact_survives_h1_collision(spark):
     assert {(r["new_pk"], r["ref_pk"]) for r in m} == {(11, 1)}
 
 
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_minhash_materialize_releases_signature_cache(spark, tables):
+    """minhash_dup_pairs returns its pair set checkpointed and leaves NO
+    persisted plan behind (the shingle/signature cache is released), with
+    the same pairs as the lazy query run inside an open scope."""
+    from adampro_spark.caching import CacheScope
+    from adampro_spark.pipeline.dedup import _minhash_pairs, minhash_dup_pairs
+
+    spark.catalog.clearCache()
+    docs = tables["documents"].select("doc_id", "text").limit(80)
+    with CacheScope() as scope:
+        lazy = set(map(tuple, _minhash_pairs(
+            scope, docs, "text", "doc_id", 0.8, 8, 32, 4, 42, 1024,
+        ).collect()))
+    assert _cache_empty(spark)
+    got = set(map(tuple, minhash_dup_pairs(docs, threshold=0.8).collect()))
+    assert got == lazy
+    assert _cache_empty(spark)
+
+
+def test_embedding_materialize_releases_vector_cache(spark, tables):
+    """embedding_dup_pairs leaves NO persisted plan behind (the vector /
+    band caches are released) and returns the same pairs as the lazy
+    query run inside an open scope."""
+    from adampro_spark.caching import CacheScope
+    from adampro_spark.pipeline.dedup import _embedding_pairs, embedding_dup_pairs
+
+    spark.catalog.clearCache()
+    emb = tables["embeddings"].select("vec_id", "embedding").limit(120)
+    with CacheScope() as scope:
+        lazy = {
+            (r["id_a"], r["id_b"], r["cos_sim"])
+            for r in _embedding_pairs(
+                scope, emb, "embedding", "vec_id", 0.9, None, None, 42, None, 1024,
+            ).collect()
+        }
+    assert _cache_empty(spark)
+    got = {
+        (r["id_a"], r["id_b"], r["cos_sim"])
+        for r in embedding_dup_pairs(emb, threshold=0.9).collect()
+    }
+    assert got == lazy
+    assert _cache_empty(spark)
+
+
+def test_simhash_materialize_releases_fingerprint_cache(spark, tables):
+    """simhash_pairs leaves NO persisted plan behind (the fingerprint
+    cache is released) and returns the same pairs as the lazy query run
+    inside an open scope."""
+    from adampro_spark.caching import CacheScope
+    from adampro_spark.pipeline.dedup import (
+        _fingerprint_pairs,
+        simhash_expr,
+        simhash_pairs,
+    )
+
+    spark.catalog.clearCache()
+    docs = tables["documents"].select("doc_id", "text").limit(120)
+    with CacheScope() as scope:
+        lazy = {
+            (r["id_a"], r["id_b"], r["hamming"])
+            for r in _fingerprint_pairs(
+                scope, docs.withColumn("_ap_fp", simhash_expr("text")), "_ap_fp",
+                "doc_id", 8, 30, 1024, (),
+            ).collect()
+        }
+    assert _cache_empty(spark)
+    got = {
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in simhash_pairs(docs, max_hamming=8).collect()
+    }
+    assert got == lazy
+    assert _cache_empty(spark)
+
+
 def test_curate_rejects_reserved_columns(spark, tables):
     from adampro_spark.pipeline.curate import curate
 
