@@ -18,12 +18,22 @@ Spark-first translation (no Python UDFs anywhere):
     tables) — whole-stage codegen, no serialization boundary, unlike the
     reference's row-at-a-time Scala UDFs;
   * the reference's per-partition ``VAResultHandler`` heap
-    (``VAResultHandler.scala:20-120``) is replaced by the plan Catalyst
-    already builds for ``orderBy(ub).limit(k)`` — TakeOrderedAndProject IS
-    a per-partition heap + driver merge; its max upper bound then prunes
-    candidates with one pushdown-friendly filter;
-  * candidate → exact-refine is a left-semi join into the entity scan
-    (``IndexScanExpression.rewrite``, :89-98).
+    (``VAResultHandler.scala:20-120``) is the plan Catalyst builds for
+    ``orderBy(lb, pk).limit(8·k)`` — TakeOrderedAndProject, a per-partition
+    heap + driver merge.  That one bound pass yields both the k-th upper
+    bound t (among the 8·k rows with the smallest lower bounds) and the
+    candidates: when fewer than 8·k rows have bounds or the 8·k-th lower
+    bound exceeds t, the prefix provably holds every row with
+    ``lb <= t`` and t is the exact k-th upper bound (see _bound_pass);
+  * candidate → exact refine (``IndexScanExpression.rewrite``, :89-98)
+    has two handovers.  A complete candidate set goes inline: its pks
+    become one ``pk IN (...)`` filter on the entity scan — no join, no
+    second bound pass; a query costs the LUT broadcast, the bound pass
+    and the refine scan, 3 jobs.  Otherwise the candidates stay a lazy
+    ``lb <= t`` filter (a superset: t ≥ the k-th upper bound), left-semi
+    joined into the entity scan; so do they when
+    ``spark.sql.autoBroadcastJoinThreshold <= 0``, which keeps the
+    bucketed, exchange-free sort-merge refine, and for non-integer pks.
 
 Deviations (documented, both strengthen exactness):
   * per-dimension min/max are computed EXACTLY over the full data in one
@@ -38,6 +48,7 @@ Deviations (documented, both strengthen exactness):
 from __future__ import annotations
 
 import math
+import re
 from typing import Any
 
 import numpy as np
@@ -45,7 +56,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from adampro_spark.functions.distances import sql_int_array
+from adampro_spark.functions.distances import sql_in, sql_int_array
 
 FEATURE_COL = "ap_indexfeature"
 LBOUND_COL = "ap_lbound"
@@ -53,6 +64,14 @@ UBOUND_COL = "ap_ubound"
 
 _SAMPLING_FREQUENCY = 10_000  # histogram buckets (EquifrequentMarksGenerator.scala:25)
 from adampro_spark.index._util import MIN_TRAINING as _MIN_TRAINING  # noqa: E402
+
+# bound-pass prefix rows per k (see scan_va).  Candidates per k,
+# |{lb <= k-th ub}| / k, measured at most 2.3 on the knn_query benchmark
+# corpus (3.6 with its label predicate) and 2.9 on the golden fixture's
+# vaf index at k=100; 8 is twice the benchmark's worst case, for a heap
+# of 8·k three-column rows per partition.  Looser bounds go lazy more
+# often (golden fixture, k=10, manhattan: up to 5.6 on vaf, 11.1 on vav)
+_PREFIX_PER_K = 8
 
 
 # ---------------------------------------------------------------------------
@@ -302,10 +321,46 @@ def scan_va(
     """Exact candidate generation: rows whose lower bound ≤ the k-th
     smallest upper bound.  Returns ``(pk, ap_lbound, ap_ubound)``.
 
-    Two jobs over the (narrow) index table: a TakeOrderedAndProject for the
-    k-th upper bound, then one pushdown-friendly filter — both map-side
-    only, no shuffle.  At 1000 executors each job reads the index table's
-    cells column only.
+    One bound pass (:func:`_bound_pass`): a TakeOrderedAndProject over the
+    first M = 8·k index rows by ``(ap_lbound, pk)``, carrying their upper
+    bounds; t is the k-th smallest upper bound among them.  The prefix is
+    complete when fewer than M rows have bounds or the M-th lower bound
+    exceeds t: then t is the global k-th upper bound and the prefix rows
+    with ``lb <= t`` are exactly the candidates.  The result here is the
+    lazy ``lb <= t`` filter — exact when complete, a superset otherwise.
+
+    ``va_knn``/``vaplus_knn`` hand the candidates to the refine scan in
+    one of two ways.  Inline, when the prefix is complete: the prefix
+    pks become one ``pk IN (...)`` filter on the entity scan, so a query
+    is 3 jobs (the bound tables' broadcast, the bound pass, the refine
+    scan).  Lazy otherwise, when ``spark.sql.autoBroadcastJoinThreshold
+    <= 0`` and for non-integer pks: the filter above is semi-joined into
+    the entity scan, which computes the bound sums a second time (5 jobs).
+
+    A ``mapInArrow`` numpy bound kernel with the bound tables in the task
+    closure needs 1 job instead of 2, but took 294 ms against 187 ms for
+    the broadcast pass (1000×64 cells, 15 repetitions, 4 vCPUs).
+    """
+    return _bound_pass(index_df, meta, query, k, p, prefilter)[0]
+
+
+def _bound_pass(
+    index_df: DataFrame,
+    meta: dict[str, Any],
+    query: list[float],
+    k: int,
+    p: float,
+    prefilter: DataFrame | None,
+) -> tuple[DataFrame, list | None]:
+    """``(lazy, pks)``: the candidates as a lazy ``lb <= t`` filter, and
+    their pks when the inline handover applies (see :func:`scan_va`).
+
+    Completeness: every row outside the prefix has lb ≥ L_M, the M-th
+    lower bound.  If L_M > t, each of the k rows with the smallest upper
+    bounds has lb ≤ ub ≤ the global k-th upper bound ≤ t < L_M, so all
+    are in the prefix and t IS the global k-th upper bound; no row
+    outside the prefix has lb ≤ t.  Otherwise t ≥ the global k-th upper
+    bound, so the lazy filter is a superset and the answer stays exact.
     """
     from adampro_spark.index._util import attach_lut
 
@@ -323,25 +378,60 @@ def scan_va(
     bounded = df.withColumns({
         LBOUND_COL: _bound_sum(offsets, "_ap_lbt"),
         UBOUND_COL: _bound_sum(offsets, "_ap_ubt"),
-    })
+    }).select(pk, LBOUND_COL, UBOUND_COL)
 
-    # NULL-feature rows (NULL source vectors) sort FIRST ascending and
-    # would consume limit(k) slots while max() ignores them — shrinking
-    # the threshold below the true k-th upper bound and pruning real
-    # neighbors (review r6).  They cannot be candidates anyway (their
-    # distance is MaxValue in refinement).
-    kth = (
+    # NULL-feature rows (NULL source vectors) have NULL bounds and sort
+    # FIRST ascending: they would take prefix slots and leave t and L_M
+    # undefined.  They cannot be candidates anyway (their distance is
+    # MaxValue in refinement).
+    m = _PREFIX_PER_K * k
+    prefix = (
         bounded.filter(F.col(UBOUND_COL).isNotNull())
-        .select(UBOUND_COL)
-        .orderBy(F.col(UBOUND_COL).asc())
-        .limit(k)
-        .agg(F.max(UBOUND_COL).alias("t"))
-        .collect()[0]["t"]
+        .orderBy(F.col(LBOUND_COL).asc(), F.col(pk).asc())
+        .limit(m)
+        .collect()
     )
-    if kth is None:  # empty index
-        return bounded.select(pk, LBOUND_COL, UBOUND_COL)
-    return bounded.filter(F.col(LBOUND_COL) <= F.lit(float(kth))).select(
-        pk, LBOUND_COL, UBOUND_COL
+    if not prefix:  # no row has bounds: every row stays a candidate
+        return bounded, None
+    ubs = sorted(r[2] for r in prefix)
+    t = ubs[min(k, len(ubs)) - 1]
+    lazy = bounded.filter(F.col(LBOUND_COL) <= F.lit(float(t)))
+    if len(prefix) == m and prefix[-1][1] <= t:
+        return lazy, None
+    pks = [r[0] for r in prefix if r[1] <= t]
+    if not all(type(v) is int for v in pks) or not _broadcast_on(df):
+        return lazy, None
+    return lazy, pks
+
+
+def _broadcast_on(df: DataFrame) -> bool:
+    """False when ``spark.sql.autoBroadcastJoinThreshold`` is ≤ 0."""
+    v = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    n = re.match(r"\s*(-?\d+)", v)
+    return n is None or int(n.group(1)) > 0
+
+
+def _refine(
+    df: DataFrame,
+    vector_col: str,
+    query: list[float],
+    k: int,
+    distance_name: str,
+    bound_pass: tuple[DataFrame, list | None],
+    pk: str,
+    **scan_kwargs,
+) -> DataFrame:
+    """Exact refinement of :func:`_bound_pass`'s candidates: its pks as one
+    ``pk IN (...)`` filter on the entity scan (one job, no join), or its
+    lazy filter semi-joined into the entity scan."""
+    from adampro_spark.operators.scan import sequential_scan
+
+    lazy, pks = bound_pass
+    if pks is not None:
+        df, lazy = df.filter(F.expr(sql_in(pk, pks))), None
+    return sequential_scan(
+        df, vector_col, query, k, distance_name, prefilter=lazy, pk=pk,
+        **scan_kwargs,
     )
 
 
@@ -365,8 +455,6 @@ def va_knn(
 
     Conformity: Minkowski family only (VAIndex.isQueryConform, :137-143).
     """
-    from adampro_spark.operators.scan import sequential_scan
-
     if p is None:
         p = _P_BY_DISTANCE.get(distance_name)
     elif distance_name != "minkowski" and p != _P_BY_DISTANCE.get(distance_name):
@@ -381,16 +469,15 @@ def va_knn(
         raise ValueError(
             f"VA index only supports Minkowski distances, got {distance_name!r}"
         )
-    cands = scan_va(index_df, meta, query, k, p=p, prefilter=prefilter)
-    return sequential_scan(
+    return _refine(
         df,
         vector_col,
         query,
         k,
         distance_name,
+        _bound_pass(index_df, meta, query, k, p, prefilter),
+        meta["pk"],
         p=p if distance_name == "minkowski" else None,
-        prefilter=cands,
-        pk=meta["pk"],
         **scan_kwargs,
     )
 

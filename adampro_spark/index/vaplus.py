@@ -29,9 +29,11 @@ from adampro_spark.caching import CacheScope
 from adampro_spark.index._util import sample_matrix
 from adampro_spark.index.va import (
     FEATURE_COL,
+    _bound_pass,
     _cells_expr,
     _equifrequent_marks,
     _minmax,
+    _refine,
     scan_va,
 )
 
@@ -147,9 +149,12 @@ def scan_vaplus(
 ) -> DataFrame:
     """Rotate q, then the standard VA bound scan (p=2; rotation preserves
     L2, so Euclidean bounds stay valid — VAPlusIndex.scala:37-41)."""
+    return scan_va(index_df, meta, _rotate(meta, query), k, p=2.0, prefilter=prefilter)
+
+
+def _rotate(meta: dict[str, Any], query: list[float]) -> list[float]:
     eigv = np.asarray(meta["pca"], dtype=np.float64)
-    q_proj = (np.asarray(query, dtype=np.float64) @ eigv).tolist()
-    return scan_va(index_df, meta, q_proj, k, p=2.0, prefilter=prefilter)
+    return (np.asarray(query, dtype=np.float64) @ eigv).tolist()
 
 
 def vaplus_knn(
@@ -164,14 +169,12 @@ def vaplus_knn(
 ) -> DataFrame:
     """Candidate scan → exact refinement on ORIGINAL vectors.
     Euclidean-family only (rotation preserves L2, not L1)."""
-    from adampro_spark.operators.scan import sequential_scan
-
     if distance_name not in ("euclidean", "squaredeuclidean"):
         raise ValueError("VA+ only supports euclidean distances")
-    cands = scan_vaplus(index_df, meta, query, k, prefilter=prefilter)
-    return sequential_scan(
-        df, vector_col, query, k, distance_name, prefilter=cands, pk=meta["pk"]
+    bound_pass = _bound_pass(
+        index_df, meta, _rotate(meta, query), k, 2.0, prefilter
     )
+    return _refine(df, vector_col, query, k, distance_name, bound_pass, meta["pk"])
 
 
 def vaplus_append(

@@ -24,10 +24,10 @@ from adampro_spark.ops import AdamOps
 K = 10
 PATHS = ("seq", "vaf", "ecp", "planned")
 # py4j commands to build one query's DataFrame (the VA paths include
-# their k-th-upper-bound job), measured on PySpark 4.1 (66 / 284 / 113 /
-# 333) plus 8 of headroom — less than re-reading the entity (~13
-# commands) or an index (~32) costs, so a per-query re-read fails here
-CEILING = {"seq": 74, "vaf": 292, "ecp": 121, "planned": 341}
+# their bound-pass job), measured on PySpark 4.1 (66 / 255 / 113 / 304)
+# plus 8 of headroom — less than re-reading the entity (~13 commands) or
+# an index (~32) costs, so a per-query re-read fails here
+CEILING = {"seq": 74, "vaf": 263, "ecp": 121, "planned": 312}
 
 
 @contextlib.contextmanager
@@ -94,6 +94,39 @@ def test_query_build_cost_is_constant(setups):
         n = {counts[(dim, path, i)] for dim in setups for i in (1, 2)}
         assert len(n) == 1, (path, counts)
         assert n.pop() <= CEILING[path], (path, counts)
+
+
+def _jobs(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` runs, read from one job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_query_job_count(spark, setups):
+    """Spark jobs per query: the VA bound pass and its candidate set are
+    one job, and a complete candidate set reaches the refine scan inline
+    (one more job, no semi-join); the planned path adds the predicate's
+    broadcast."""
+    jobs = {}
+    for dim, (ops, x) in setups.items():
+        for path in PATHS:
+            _build(ops, path, x[3].tolist()).collect()  # caches filled
+            jobs[(dim, path)] = _jobs(
+                spark, f"knn-jobs-{dim}-{path}",
+                lambda: _build(ops, path, (x[4] + 0.01).tolist()).collect(),
+            )
+    for dim in setups:
+        assert jobs[(dim, "seq")] == 1, jobs
+        assert jobs[(dim, "ecp")] == 2, jobs
+        assert jobs[(dim, "vaf")] <= 3, jobs
+        assert jobs[(dim, "planned")] <= jobs[(dim, "vaf")] + 1, jobs
 
 
 def test_repeated_queries_reuse_relations(setups):
